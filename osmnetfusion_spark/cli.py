@@ -48,12 +48,10 @@ def cmd_pipeline(args) -> None:
             config={"scale": args.scale, "code": code_fingerprint()},
             reuse_mismatched=args.resume,
         )
-        nodes, edges = pipeline.run_full(
-            spark, city, metrics, snap=snap, barriers=args.barriers
-        )
+        nodes, edges = pipeline.run_full(spark, city, metrics, snap=snap)
         nodes = snap.stage("final_nodes", lambda: nodes, "g_id")
     else:
-        nodes, edges = pipeline.run_full(spark, city, metrics, barriers=args.barriers)
+        nodes, edges = pipeline.run_full(spark, city, metrics)
     print(json.dumps({"nodes": nodes.count(), "edges": edges.count(), "metrics": metrics}))
 
 
@@ -89,21 +87,6 @@ def main(argv=None) -> None:
                     help="resume is implied by --warehouse when the run config "
                     "(scale, code hash) matches the manifest; pass --resume to "
                     "reuse a MISMATCHED warehouse's snapshots anyway")
-    pp.add_argument(
-        "--barriers", choices=["auto", "operator", "phase"], default="auto",
-        # NOTE: no printf-style pre-formatting here -- argparse expands
-        # help with `help %% params` itself, so a pre-format collapses
-        # the escaped %% and --help then crashes on the bare %
-        help="simplification stage-boundary granularity: 'operator' "
-        "materializes every step (max resume coverage; fastest at small "
-        "inputs); 'phase' keeps only the four natural phase boundaries "
-        "(measured ~12%% faster at 65k-edge inputs -- skipped "
-        "materialization of large intermediates outweighs the "
-        "recomputation; identical output, see BENCH/BASELINE.md); "
-        "'auto' (default) picks operator for durable-snapshot runs and "
-        "small inputs, phase above "
-        + str(pipeline.AUTO_PHASE_EDGE_THRESHOLD) + " edges",
-    )
     pp.set_defaults(fn=cmd_pipeline)
 
     ps = sub.add_parser("snap")

@@ -23,7 +23,8 @@ finest resolution whose cell short side still exceeds the join radius.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import reduce
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -32,99 +33,15 @@ from pyspark.sql import functions as F
 
 from .. import h3idx
 from ..functions import geo
+from .partitioning import fan_out, scan_bytes
 
 _NEIGHBOR_OFFS = [dj * h3idx.SHIFT_J + di for dj in (-1, 0, 1) for di in (-1, 0, 1)]
-
-
-def fan_out_probe(df: DataFrame, key: str) -> DataFrame:
-    """Ensure the probe side has >= the session's shuffle parallelism.
-
-    Small probe tables arrive as 1-2 scan partitions (a tiny parquet file
-    cannot split below its row groups), and because the build side
-    broadcasts, the candidate-explosion + refinement map stage inherits
-    that parallelism: ONE task evaluating millions of candidate pairs
-    (measured: 1.03M-pair amenity join ran 9.6 s single-task at sf0.1).
-    A pre-shuffle of the narrow probe rows fans the stage out -- and since
-    it hash-partitions on the entity key, the downstream per-entity
-    aggregation/window needs no second exchange. No-op at web scale, where
-    the probe already has thousands of partitions.
-
-    WARNING: never probe `df.rdd.getNumPartitions()` here -- under AQE,
-    converting to an RDD FINALIZES the adaptive plan, which materializes
-    its shuffle query stages: a silent extra job that re-executes the
-    whole probe subplan (measured: one hidden job per join, and the
-    two-parallelism scaling evidence collapsed from 0.80 to 0.28 until it
-    was removed). The small-scan test below reads only file metadata.
-    """
-    spark = df.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    # non-file sources (range/createDataFrame/post-shuffle) inherit the
-    # session's parallelism already; only a small file scan needs fan-out
-    if not files or len(files) >= target:
-        return df
-    import os as _os
-
-    total = 0
-    for f in files[:64]:
-        try:
-            total += _os.path.getsize(f[7:] if f.startswith("file:") else f)
-        except OSError:
-            return df
-    if total > (128 << 20):
-        return df  # big scan: the file splitter already parallelizes it
-    return df.repartition(target, F.col(key))
 
 
 # conservative ceiling for an explicit build-side broadcast: cover-cell
 # explosion multiplies the segment rows ~3-5x, and every executor holds a
 # full copy, so cap well below typical executor memory
 BROADCAST_GUARD_BYTES = 256 << 20
-
-
-def _input_bytes(df: DataFrame) -> int | float | None:
-    """Source-file bytes feeding a DataFrame (None if not a file scan;
-    ``float('inf')`` if a source file cannot be sized locally — which
-    includes every non-local URI such as s3a:// or hdfs://).
-
-    File-metadata only -- never touches ``df.rdd`` (under AQE that
-    finalizes the plan and runs hidden jobs, see :func:`fan_out_probe`).
-    Pre-filter source size, so it over-estimates: safe direction for a
-    broadcast guard.
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    import os as _os
-    from urllib.parse import urlparse as _urlparse
-
-    total = 0
-    for f in files:
-        parsed = _urlparse(f)
-        # Only LOCAL files are sizable here. A remote URI (s3a/hdfs/...)
-        # must read as unsizable by its scheme, not by hoping getsize
-        # fails: its bare path could coincidentally exist on the driver
-        # (shared mount, leftover warehouse) and a bogus local size
-        # would re-enable the broadcast hint for a planet-scale table.
-        if parsed.scheme not in ("", "file"):
-            return float("inf")
-        # file:///p and file:/p both occur in Hadoop path renderings;
-        # urlparse handles either (netloc empty, path '/p').
-        path = parsed.path if parsed.scheme == "file" else f
-        try:
-            total += _os.path.getsize(path)
-        except OSError:
-            # Unreadable size must read as "too big", not "no estimate":
-            # returning None here would silently re-enable the broadcast
-            # hint for a build side we could not size (unsafe direction).
-            return float("inf")
-    return total
 
 
 def _maybe_broadcast(df: DataFrame, want: bool) -> DataFrame:
@@ -140,7 +57,7 @@ def _maybe_broadcast(df: DataFrame, want: bool) -> DataFrame:
     """
     if not want:
         return df
-    est = _input_bytes(df)
+    est = scan_bytes(df)
     if est is not None and est > BROADCAST_GUARD_BYTES:
         return df
     return F.broadcast(df)
@@ -276,7 +193,7 @@ def knn1_join_segments_cellfold(
         .withColumn("__aby", (F.col("by") - F.col("ay")) * m)
         .withColumn("__v", F.col("__abx") * F.col("__abx") + F.col("__aby") * F.col("__aby"))
     )
-    probe = fan_out_probe(
+    probe = fan_out(
         points.select(point_id, lat, lon, *[c for c in carry if c not in (point_id, lat, lon)]),
         point_id,
     ).withColumn("cell", h3idx.cell_col(F.col(lat), F.col(lon), res))
@@ -401,7 +318,7 @@ def radius_join_segments(
             cover_segment_cells(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), res, dilate_k=1)
         ),
     )
-    probe = fan_out_probe(points, point_id).withColumn(
+    probe = fan_out(points, point_id).withColumn(
         "cell", h3idx.cell_col(F.col(lat), F.col(lon), res)
     )
 
@@ -415,6 +332,25 @@ def radius_join_segments(
     cand = cand.filter(F.col("seg_dist_m") <= F.lit(float(radius_m)))
     # per (point, entity): min over that entity's segments (and dup cells)
     return cand.groupBy(point_id, seg_id).agg(F.min("seg_dist_m").alias("dist_m"))
+
+
+def _cascade(
+    knn1: Callable[[DataFrame, float], DataFrame],
+    points: DataFrame,
+    radii: tuple[float, ...],
+    point_id: str,
+) -> DataFrame:
+    """Escalating-radius kNN(1): ``knn1(remaining, r)`` at each radius in
+    turn, materialized once per rung; only points still unmatched (a
+    left-anti join on ``point_id``) go on to the next radius. Returns the
+    union of all rungs."""
+    remaining = points
+    outs = []
+    for r in radii:
+        matched = knn1(remaining, r).localCheckpoint()
+        outs.append(matched)
+        remaining = remaining.join(matched.select(point_id), point_id, "left_anti")
+    return reduce(DataFrame.unionByName, outs)
 
 
 def knn_join_segments_adaptive(
@@ -440,19 +376,13 @@ def knn_join_segments_adaptive(
     Correctness caveat: identical only for k=1 (enforced).
     """
     assert k == 1, "adaptive cascade preserves exactness only for k=1"
-    remaining = points
-    outs = []
-    for r in radii:
-        matched = knn_join_segments(
+    return _cascade(
+        lambda remaining, r: knn_join_segments(
             remaining, segments, radius_m=r, k=1,
             point_id=point_id, seg_id=seg_id, lat=lat, lon=lon, carry=carry,
-        ).localCheckpoint()
-        outs.append(matched)
-        remaining = remaining.join(matched.select(point_id), point_id, "left_anti")
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+        ),
+        points, radii, point_id,
+    )
 
 
 def knn_join_points_adaptive(
@@ -478,21 +408,15 @@ def knn_join_points_adaptive(
     r_i is by definition the global nearest within any r_j > r_i, and
     the (dist, id) tie-break is the same at every level.
     """
-    remaining = probe
-    outs = []
-    for r in radii:
-        matched = knn_join_points(
+    return _cascade(
+        lambda remaining, r: knn_join_points(
             remaining, build, radius_m=r, k=1,
             probe_id=probe_id, build_id=build_id,
             probe_lat=probe_lat, probe_lon=probe_lon,
             build_lat=build_lat, build_lon=build_lon,
-        ).localCheckpoint()
-        outs.append(matched)
-        remaining = remaining.join(matched.select(probe_id), probe_id, "left_anti")
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+        ),
+        probe, radii, probe_id,
+    )
 
 
 def knn_join_points(
@@ -508,7 +432,15 @@ def knn_join_points(
     build_lon: str = "lon",
     exclude_same_id: bool = False,
 ) -> DataFrame:
-    """kNN (<= radius_m) point-to-point join (signals -> nearest node)."""
+    """kNN (<= radius_m) point-to-point join (signals -> nearest node).
+
+    k=1 runs as a struct-min over ``(dist_m, build_id, *probe columns)``
+    per ``probe_id``. This assumes ``probe_id`` is unique in ``probe``:
+    probe rows sharing an id form one group, and at a (dist, build_id)
+    tie the probe columns themselves decide which row's values are
+    returned. Every probe column must also be orderable (no map
+    columns), because it rides inside the min struct.
+    """
     res = h3idx.pick_res(radius_m)
     b = build.select(
         F.col(build_id).alias("__bid"),
@@ -520,7 +452,7 @@ def knn_join_points(
             dilate_cells(F.array(h3idx.cell_col(F.col("__blat"), F.col("__blon"), res)), 1)
         ),
     )
-    p = fan_out_probe(probe, probe_id).withColumn(
+    p = fan_out(probe, probe_id).withColumn(
         "cell", h3idx.cell_col(F.col(probe_lat), F.col(probe_lon), res)
     )
     cand = p.join(b, "cell").withColumn(
@@ -619,7 +551,7 @@ def pip_join(
         )
         .drop("__mnlat", "__mxlat", "__mnlon", "__mxlon")
     )
-    p = fan_out_probe(points, point_id).withColumn(
+    p = fan_out(points, point_id).withColumn(
         "cell", h3idx.cell_col(F.col(lat), F.col(lon), res)
     )
     cand = p.join(b, "cell").select(
@@ -740,7 +672,7 @@ def intersection_length_join(
         )
         .drop("__mnlat", "__mxlat", "__mnlon", "__mxlon")
     )
-    s = fan_out_probe(segments, seg_id).withColumn(
+    s = fan_out(segments, seg_id).withColumn(
         "cell",
         F.explode(cover_segment_cells(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), res)),
     )

@@ -792,7 +792,8 @@ def bpe_encode(
     JVM-side array fold -- no shuffle, no Python, no state; plan depth
     is bounded by ``checkpoint_every`` materialization barriers so a
     50k-merge vocabulary cannot build a 50k-deep expression tree.
-    Output: ``(doc_id, toks, n_tokens)``.
+    Output: ``(doc_id, toks, n_tokens)``, one row per input document; a
+    NULL text gives NULL ``toks`` and ``n_tokens``.
     """
     if checkpoint_every < 1:
         raise ValueError(
@@ -817,8 +818,12 @@ def bpe_encode(
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < len(merges):
             types = types.localCheckpoint()
-    return tok.join(types, "__toks0").select(
-        F.col(doc_id), "toks", F.size("toks").cast("int").alias("n_tokens")
+    # left join: a NULL text has a NULL array key, which no equi-join
+    # matches -- the document survives with NULL toks and n_tokens
+    return tok.join(types, "__toks0", "left").select(
+        F.col(doc_id),
+        "toks",
+        F.when(F.col("toks").isNotNull(), F.size("toks")).cast("int").alias("n_tokens"),
     )
 
 

@@ -148,8 +148,9 @@ def _an_edge_cv(
     uv: bool, rev_flag: bool,
 ) -> dict | None:
     """AnEdge fold (p3_functions.py:1542-1601) for one direction — array-
-    view twin of :func:`_an_edge_pandas` (same values; pinned by
-    tests/test_merge_cv_equivalence.py and the golden/contract suites)."""
+    view twin of ``tests/_twins.py::an_edge_pandas`` (same values; pinned
+    by tests/test_merge_cv_equivalence.py and the golden/contract
+    suites)."""
     sub_idx = gidx[direction == rev_flag]
     if len(sub_idx) == 0:
         return None
@@ -239,7 +240,8 @@ def _an_edge_cv(
 def _fold_group_arrays(d: dict, lo: int, hi: int) -> list[dict]:
     """Greedy per-uv-pair merge (p3_functions.py:700-790) over one
     contiguous group slice of the batch's column arrays — array-view twin
-    of :func:`_fold_uv_group_pandas` (same greedy order, same values)."""
+    of ``tests/_twins.py::fold_uv_group_pandas`` (same greedy order, same
+    values)."""
     n = hi - lo
     osmid = d["osmid"][lo:hi]
     rank = d["highway_rank"][lo:hi].astype(float)
@@ -307,164 +309,6 @@ def _fold_group_arrays(d: dict, lo: int, hi: int) -> list[dict]:
             if rec is not None:
                 recs.append(rec)
     return recs
-
-
-def _an_edge_pandas(df: pd.DataFrame, main: pd.Series, uv: bool, rev_flag: bool) -> dict | None:
-    """AnEdge fold (p3_functions.py:1542-1601) for one direction — the
-    original pandas implementation, kept as the reference twin for
-    tests/test_merge_cv_equivalence.py (prod path is `_an_edge_cv`)."""
-    subset = df[df.direction == rev_flag]
-    if len(subset) == 0:
-        return None
-    rec: dict = {
-        "g_u": int(main.new_u),
-        "g_v": int(main.new_v),
-        "g_id": int(main.osmid),
-        "g_lit": folds.is_lit_py(df.lit),
-        "g_incline": py_list_str([str(a) for a in subset.incline if str(a) in ["up", "down"]]),
-        "g_gradient": folds.mean_py(subset.gradient),
-        "g_height_d": folds.mean_py(subset.height_difference),
-        "g_severity": folds.mean_py(subset.severity),
-        "g_reversed": not uv,
-        "g_crossing": py_list_str(folds.get_param_py(df.crossing)) if "crossing" in df.columns else None,
-        "g_greenR": folds.mean_py(df.green_ratio),
-        "g_retailR": folds.mean_py(df.retail_ratio),
-        "g_buildR": folds.mean_py(df.building_ratio),
-        "g_geometry": list(main.geometry),
-        "g_geo_lin": list(main.geom_linear),
-        "g_geo_rea": list(main.geom_reassigned),
-        "__main_osmid": int(main.osmid),
-    }
-    pl, pr = folds.parking_py(df)
-    rec["g_parkingL"] = py_list_str(pl)
-    rec["g_parkingR"] = py_list_str(pr)
-    rec["l_id"] = py_list_str(folds.listify_py(subset.osmid, as_int=True))
-    old = folds.norm_old_osmid(subset.old_osmid)
-    rec["l_osmid"] = py_list_str(folds.listify_py(old, as_int=True))
-    rec["l_old_u"] = py_list_str(folds.listify_py(subset.old_u, as_int=True))
-    rec["l_old_v"] = py_list_str(folds.listify_py(subset.old_v, as_int=True))
-    rec["l_highway"] = py_list_str(folds.listify_py(subset.highway))
-    rec["l_hw_rank"] = py_list_str(folds.listify_py(subset.highway_rank))
-
-    rec["access_wal"] = folds.access_walk_py(subset)
-    rec["access_bik"] = folds.access_bike_py(subset)
-    rec["access_mot"] = folds.access_motorized_py(subset)
-
-    if rec["access_wal"]:
-        wr = folds.walk_rows(df)
-        rec["w_length"] = float(wr.length.max()) if len(wr) else None
-        rec["w_surface"] = py_list_str(folds.listify_py(wr.surface))
-        rec["w_smoothne"] = py_list_str(folds.listify_py(wr.smoothness))
-        rec["w_segregat"] = py_list_str(folds.listify_py(wr.segregated))
-        rec["w_width"] = folds.weighted_vals_py(wr.width, wr.length) if len(wr) else None
-    if rec["access_bik"]:
-        br = folds.bike_rows(df)
-        if len(br):
-            rec["b_length"] = float(br.length.max())
-            if "cycleway:surface" in br.columns and len(br["cycleway:surface"].explode().unique()) > 1:
-                rec["b_surface"] = py_list_str(folds.listify_py(br["cycleway:surface"]))
-            else:
-                rec["b_surface"] = py_list_str(folds.listify_py(br.surface))
-            rec["b_smoothne"] = py_list_str(folds.listify_py(br.smoothness))
-            if "width_cycle_path" in br.columns:
-                rec["b_width"] = py_list_str(folds.weighted_vals_py(br.width_cycle_path, br.length))
-            elif "cycleway:width" in br.columns:
-                rec["b_width"] = py_list_str(folds.listify_py(br["cycleway:width"]))
-            rec["b_bikeRoad"] = bool((br.bicycle_road == "yes").any())
-            rec["b_oneway"] = bool((br["oneway:bicycle"] == "yes").any()) if "oneway:bicycle" in br.columns else False
-            am_on = folds.listify_py(br.amenity_on)
-            rec["b_amntyOn"] = py_list_str(am_on)
-            rec["b_amntyNea"] = py_list_str(folds.listify_py(br.amenity_nearby))
-            rec["b_bikerack"] = any("bicycle_parking" in str(a) for a in am_on)
-            cat_rows = br[br.cycleway_category != br.highway]
-            rec["b_category"] = py_list_str(folds.listify_py(cat_rows.cycleway_category))
-            rec["b_attribut"] = py_list_str(folds.cycleway_attributes_py(br))
-            rec["b_segregat"] = py_list_str(folds.listify_py(br.segregated))
-    if rec["access_mot"]:
-        mr = folds.motorized_rows(df)
-        rec["m_length"] = float(mr.length.max()) if len(mr) else None
-        rec["m_width"] = folds.weighted_vals_py(mr.width, mr.length)
-        rec["m_lanes"] = folds.weighted_vals_py(mr.lanes, mr.length)
-        rec["m_oneway"] = bool(mr.oneway.isin([True, "True"]).any())
-        rec["m_maxspeed"] = folds.weighted_vals_py(mr.maxspeed, mr.length)
-        rec["m_ptStop"] = int(mr.pt_stop_on.max()) if len(mr) else None
-        rec["m_ptRoutes"] = py_list_str(folds.listify_py(mr.pt_stop_routes))
-    return rec
-
-
-def _fold_uv_group_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Greedy per-uv-pair merge (p3_functions.py:700-790), group-local —
-    original pandas implementation, kept as the reference twin for
-    tests/test_merge_cv_equivalence.py (prod path is `_fold_group_arrays`
-    via `_run_uv_batches`)."""
-    pdf = pdf.sort_values(["highway_rank", "osmid"], ascending=[False, True]).reset_index(drop=True)
-    # '' -> null normalization (Link init :1503) happens ONCE in the JVM
-    # (merge_edges nullifs every string column before the shuffle) -- doing
-    # it here cost ~50 pandas .map calls per (tiny) group
-    work = pdf
-    n = len(pdf)
-    state = [""] * n
-    recs: list[dict] = []
-    # plain arrays for the pairwise partner scan (a Series per pair costs
-    # ~50x the comparison on these 2-5 row groups)
-    arr_nu = work["new_u"].to_numpy()
-    arr_nv = work["new_v"].to_numpy()
-    arr_len = work["length"].to_numpy(dtype=float)
-    for i in range(n):
-        if state[i] == "r":
-            continue
-        state[i] = "k"
-        row = work.iloc[i]
-        partners: list[int] | None
-        if n < 2:
-            partners = None
-        else:
-            partners = []
-            l1 = float(arr_len[i])
-            for j in range(n):
-                if j == i or state[j] == "k" or state[j] == "r":
-                    continue
-                if arr_nu[j] == arr_nv[j]:
-                    state[j] = "r"
-                    continue
-                l2 = float(arr_len[j])
-                if (l1 < 1e-7) or (l2 < 1e-7):
-                    partners.append(j)
-                elif max(l1 / max(l2, 1e-300), l2 / max(l1, 1e-300)) < 1.5:
-                    partners.append(j)
-            if not partners:
-                continue  # representative emits no link (:760-761)
-            for j in partners:
-                state[j] = "r"
-        # ---- Link fold (:1476-1540)
-        if partners:
-            df = pd.concat([work.iloc[partners], work.iloc[[i]]], ignore_index=False)
-            angle_l1 = float(row.bearing) if row.bearing == row.bearing else 0.0
-        else:
-            df = work.iloc[[i]].copy()
-            seg = np.array([list(c) for c in row.geom_linear], dtype=float)
-            angle_l1 = float(np.degrees(np.arctan2(seg[1][1] - seg[0][1], seg[1][0] - seg[0][0])))
-            df["bearing"] = angle_l1
-        df = df.copy()
-        df["direction"] = False
-        bmax, bmin = df.bearing.max(), df.bearing.min()
-        if not ((bmax - bmin) < 90):
-            a = (angle_l1 - 90) if (angle_l1 - 90) > -180 else angle_l1 + 270
-            b = (angle_l1 + 90) if (angle_l1 + 90) < 180 else angle_l1 - 270
-            lower, upper = min(a, b), max(a, b)
-            df.loc[(df.bearing < upper) & (df.bearing > lower), "direction"] = True
-        main_dir = bool(df["direction"].iloc[-1])  # mainRow is the last row
-        rec_uv = _an_edge_pandas(df, row, uv=True, rev_flag=main_dir)
-        rec_vu = _an_edge_pandas(df, row, uv=False, rev_flag=(not main_dir))
-        for rec in (rec_uv, rec_vu):
-            if rec is not None:
-                recs.append(rec)
-    cols = [f.split(" ")[0].strip("`") for f in EDGE_OUT_SCHEMA.split(", ")]
-    out = pd.DataFrame(recs)
-    for c in cols:
-        if c not in out.columns:
-            out[c] = None
-    return out[cols] if len(out) else pd.DataFrame(columns=cols)
 
 
 def _run_uv_batches(it):

@@ -20,87 +20,19 @@ NODE_TAG_COLS = [
 ]
 
 
-#: p3 barriers kept in "phase" granularity: the four natural phase
-#: boundaries (post-buffer-split s6, post-cluster s7, post-reassign s8,
-#: post-merge final). s1_edges and s5_nodes become lazy: split_curves is
-#: pure column logic (cheap to recompute) and cluster_nodes already
-#: truncates its own lineage internally (the CC loop localCheckpoints),
-#: so their extra barriers are pure scheduling overhead.
-PHASE_BARRIERS = frozenset(
-    {"s6_edges", "s6_nodes", "s7_nodes", "s8_edges", "final_edges"}
-)
-
-#: Input size (edge rows) above which ``barriers="auto"`` picks phase
-#: granularity for non-durable runs. From the §1.2 audit
-#: (BENCH/BASELINE.md, tools/bench_barriers.py): at 4k edges the two
-#: modes are within noise of each other (29.2 vs 27.7 s r4 window, 36.2
-#: vs 38.2 s r3 window), at 16k edges phase wins ~25% (65.4 vs 49.2 s)
-#: and at 65k ~12% — skipping materialization of the large s1/s5
-#: intermediates beats the recomputation once localCheckpoint write
-#: volume dominates. Operator stays the small-input default for its
-#: stronger step isolation; the crossover is placed between the 4k and
-#: 16k cells.
-AUTO_PHASE_EDGE_THRESHOLD = 8_000
-
-
-def resolve_barriers(barriers: str, snap, edges: DataFrame) -> str:
-    """Resolve the ``barriers`` mode for a simplification run.
-
-    Explicit "operator"/"phase" pass through. "auto" resolves to:
-
-    - "operator" with a durable ``Snapshotter`` — resume coverage wants
-      every step boundary committed, and the audit's 12% is a local-mode
-      localCheckpoint-I/O effect that doesn't apply to durable stages;
-    - otherwise "phase" when the input exceeds
-      :data:`AUTO_PHASE_EDGE_THRESHOLD` edges, else "operator".
-
-    The edge count is only taken when ``edges`` is a MATERIALIZED root
-    (a localCheckpoint'd LogicalRDD or a bare file scan — both count in
-    metadata time; ``run_full`` always hands over the checkpointed
-    enrichment output, so this is the normal path). A caller invoking
-    this directly with a lazy multi-stage plan would otherwise pay a
-    full upstream recomputation just to pick a barrier mode (ADVICE
-    r4), so an un-countable input resolves straight to "phase" — the
-    at-scale-safe choice; the two modes differ only in how many
-    intermediates materialize, never in output.
-    """
-    if barriers != "auto":
-        if barriers not in ("operator", "phase"):
-            raise ValueError(f"unknown barriers mode {barriers!r}")
-        return barriers
-    if snap is not None:
-        return "operator"
-    try:
-        plan = edges._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        plan = ""
-    root = plan.splitlines()[0] if plan else ""
-    cheap = ("LogicalRDD" in root) or (
-        root.lstrip().startswith(("Relation", "Range", "LocalRelation"))
-        and len(plan.splitlines()) <= 2
-    )
-    if not cheap:
-        return "phase"
-    return "phase" if edges.count() >= AUTO_PHASE_EDGE_THRESHOLD else "operator"
-
-
-def _stager(snap, prefix: str, keep: frozenset | None = None):
-    """Stage-boundary materializer.
+def _stager(snap, prefix: str):
+    """Stage-boundary materializer: every boundary always materializes.
 
     With a ``checkpoint.Snapshotter`` (the at-scale default: snapshots
     survive executor/driver loss and a restarted run SKIPS completed
     stages -- the closure is never invoked, so no upstream job runs),
     each boundary is a durable table + manifest commit. Without one
-    (single-host fast path: tests, bench), it is a ``localCheckpoint``,
-    which truncates lineage but is forfeited on executor loss.
-
-    ``keep``: when given, only the named boundaries materialize; the
-    rest stay lazy (barrier-granularity audit, VERDICT r2 #4).
+    (single-host fast path: tests, bench), it is a lazy
+    ``localCheckpoint``, which truncates lineage but is forfeited on
+    executor loss.
     """
 
     def bound(name: str, key: str, fn):
-        if keep is not None and name not in keep:
-            return fn()
         if snap is not None:
             return snap.stage(f"{prefix}{name}", fn, key)
         # lazy: the boundary still materializes exactly once (first
@@ -208,28 +140,19 @@ def run_simplification(
     cluster_threshold: int = simplify.CLUSTER_THRESHOLD,
     metrics: dict | None = None,
     snap=None,
-    barriers: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """p3 steps 1-13. Returns (final_nodes, final_edges).
 
     With ``snap`` each step boundary is a durable snapshot; a restarted
     run resumes after the last committed step (the stage closures are
-    never invoked for completed steps, so no upstream jobs run).
-
-    ``barriers``: "operator" materializes every step boundary; "phase"
-    keeps only :data:`PHASE_BARRIERS` and leaves the rest lazy (fewer
-    materializations of the big intermediates); "auto" (default) picks
-    per :func:`resolve_barriers`. Outputs are identical across modes
-    (asserted by tools/bench_barriers.py and test_pipeline).
+    never invoked for completed steps, so no upstream jobs run); without
+    it each boundary is a lazy ``localCheckpoint``.
     """
     import time as _time
 
     m = metrics if metrics is not None else {}
     _t = [_time.time()]
-    barriers = resolve_barriers(barriers, snap, edges)
-    m["barriers_mode"] = barriers
-    keep = PHASE_BARRIERS if barriers == "phase" else None
-    bound = _stager(snap, "p3_", keep=keep)
+    bound = _stager(snap, "p3_")
 
     def lap(name):
         now = _time.time()
@@ -355,9 +278,6 @@ def run_full(
     tables: dict[str, DataFrame],
     metrics: dict | None = None,
     snap=None,
-    barriers: str = "auto",
 ):
     nodes, edges = run_enrichment(spark, tables, metrics=metrics, snap=snap)
-    return run_simplification(
-        spark, nodes, edges, metrics=metrics, snap=snap, barriers=barriers
-    )
+    return run_simplification(spark, nodes, edges, metrics=metrics, snap=snap)

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .. import h3idx
 from ..functions import geo
+from ..operators.partitioning import fan_out
 
 # reference configFile.py:171-186
 HIGHWAY_RANKING = {
@@ -104,8 +105,6 @@ def split_curves(edges: DataFrame) -> DataFrame:
     New nodes are derivable from the output: every sub-edge u >= base marks
     a split node at its first coordinate (see :func:`curve_split_nodes`).
     """
-    from ..operators.partitioning import fan_out
-
     # thin file scans serialize the per-candidate angle scan on one core
     # (no-op for the pipeline's materialized city tables and at scale)
     edges = fan_out(edges)
@@ -386,9 +385,11 @@ def connected_components(
             "l1 long, __root long",
         )
     else:
-        root_map = _cc_iterative(contracted, spark).withColumnRenamed(
-            "osmid", "l1"
-        ).withColumnRenamed("component", "__root")
+        root_map = (
+            _cc_iterative(contracted, spark, driver_limit=driver_limit)
+            .withColumnRenamed("osmid", "l1")
+            .withColumnRenamed("component", "__root")
+        )
 
     members = (
         pairs.select(F.col("ia").alias("osmid"))
@@ -584,8 +585,9 @@ def _split_fast_2pt(pdf: pd.DataFrame) -> list[dict]:
     """Vectorized refinement for single-segment edges (the common
     case after split_curves): all candidate rows at once, ragged
     member-disk lists flattened with a row-index gather. Element
-    arithmetic is IDENTICAL to the per-row loop below -- same
-    kernels, same comparison order -- so results are bit-equal
+    arithmetic is IDENTICAL to the per-row loop
+    (``tests/_twins.py::split_rows_loop``) -- same kernels, same
+    comparison order -- so results are bit-equal
     (pinned by the q_split_in_buffers contract, whose field is all
     2-point edges, plus golden/parity over mixed geometries)."""
     n = len(pdf)
@@ -633,72 +635,14 @@ def _split_fast_2pt(pdf: pd.DataFrame) -> list[dict]:
     ]
 
 
-def _split_rows_loop(pdf: pd.DataFrame) -> list[dict]:
-    """Per-row reference twin of :func:`_split_fast_multi` (the
-    pre-round-4 multi-point path, reference p3_functions.py:528-556).
-    Kept for the bit-equality parity test; not on the hot path."""
-    rows = []
-    for _, r in pdf.iterrows():
-        coords = np.array([list(c) for c in r["geometry"]], dtype=float)
-        if (coords[0] == coords[-1]).all():
-            continue  # linear ring (reference :534-536)
-        disks = np.array([[d["x"], d["y"], d["buf_r"]] for d in r["disks"]])
-        dd0 = geo.haversine_np(
-            np.full(len(disks), coords[0, 1]), np.full(len(disks), coords[0, 0]),
-            disks[:, 1], disks[:, 0],
-        )
-        dd1 = geo.haversine_np(
-            np.full(len(disks), coords[-1, 1]), np.full(len(disks), coords[-1, 0]),
-            disks[:, 1], disks[:, 0],
-        )
-        if (dd0 <= disks[:, 2]).any() or (dd1 <= disks[:, 2]).any():
-            continue  # an endpoint is inside the buffer (:538)
-        # does the edge intersect any member disk?
-        ax, ay = coords[:-1, 0], coords[:-1, 1]
-        bx, by = coords[1:, 0], coords[1:, 1]
-        hit = False
-        for dx, dy, dr in disks:
-            d = geo.point_segment_dist_np(
-                np.full(len(ax), dy), np.full(len(ax), dx), ay, ax, by, bx
-            )
-            if (d <= dr).any():
-                hit = True
-                break
-        if not hit:
-            continue
-        # nearest polyline point to the cluster centroid
-        px, py = float(r["ccx"]), float(r["ccy"])
-        kx = np.cos(np.radians(py)) * geo.M_PER_DEG
-        ky = geo.M_PER_DEG
-        apx, apy = (px - ax) * kx, (py - ay) * ky
-        abx, aby = (bx - ax) * kx, (by - ay) * ky
-        ab2 = abx * abx + aby * aby
-        t = np.where(ab2 > 0, (apx * abx + apy * aby) / np.where(ab2 > 0, ab2, 1), 0.0)
-        t = np.clip(t, 0.0, 1.0)
-        qx, qy = ax + t * (bx - ax), ay + t * (by - ay)
-        dist = np.sqrt((apx - t * abx) ** 2 + (apy - t * aby) ** 2)
-        si = int(np.argmin(dist))
-        sx, sy = float(qx[si]), float(qy[si])
-        if (abs(sx - coords[0, 0]) < 1e-12 and abs(sy - coords[0, 1]) < 1e-12) or (
-            abs(sx - coords[-1, 0]) < 1e-12 and abs(sy - coords[-1, 1]) < 1e-12
-        ):
-            continue  # nearest point is an endpoint (:540)
-        # position along the line for ordering multi-splits
-        seg_lens = geo.haversine_np(ay, ax, by, bx)
-        pos = float(np.sum(seg_lens[:si]) + t[si] * seg_lens[si])
-        rows.append({"eid": int(r["eid"]), "seg_i": si, "t": float(t[si]),
-                     "sx": sx, "sy": sy, "pos": pos, "mb": int(r["merged_by"])})
-    return rows
-
-
 def _split_fast_multi(pdf: pd.DataFrame) -> list[dict]:
     """Vectorized refinement for multi-point polylines: the ragged
     ``np.repeat`` row-index gather of :func:`_split_fast_2pt` extended to
     two ragged axes (segments-per-edge and disks-per-cluster, crossed at
     the pair level for the intersects-any-disk test). Element arithmetic,
     comparison order, per-row first-argmin, and the prefix-sum shape of
-    ``pos`` are IDENTICAL to :func:`_split_rows_loop` -- the per-row
-    reference twin -- so results are bit-equal (pinned by
+    ``pos`` are IDENTICAL to ``tests/_twins.py::split_rows_loop`` -- the
+    per-row reference twin -- so results are bit-equal (pinned by
     ``tests/test_plans.py::test_split_fast_multi_matches_loop`` plus the
     golden/parity suites over mixed geometries)."""
     n = len(pdf)
@@ -1050,8 +994,8 @@ def _reassign_batch(pdf: pd.DataFrame) -> tuple[list, list, list]:
     """Batch kernel for step 8 (all rows at once, ragged polylines
     flattened with the same ``np.repeat`` row-index gather as
     ``_fast_2pt``). Element arithmetic, comparison order, and per-row
-    summation shape are IDENTICAL to :func:`_reassign_batch_loop` -- the
-    per-row reference twin -- so outputs are bit-equal (pinned by
+    summation shape are IDENTICAL to ``tests/_twins.py::reassign_batch_loop``
+    -- the per-row reference twin -- so outputs are bit-equal (pinned by
     ``tests/test_plans.py::test_reassign_batch_matches_loop`` and the
     q_reassign contract)."""
     n = len(pdf)
@@ -1138,36 +1082,4 @@ def _reassign_batch(pdf: pd.DataFrame) -> tuple[list, list, list]:
         lin.append([[u_px[i], u_py[i]], [v_px[i], v_py[i]]])
         rea.append(chosen.tolist())
         lens.append(float(lens_all[i]))
-    return lin, rea, lens
-
-
-def _reassign_batch_loop(pdf: pd.DataFrame) -> tuple[list, list, list]:
-    """Per-row reference twin of :func:`_reassign_batch` (the pre-round-4
-    implementation, reference p3_functions.py:580-652). Kept for the
-    bit-equality parity test; not on the hot path."""
-    lin, rea, lens = [], [], []
-    for _, r in pdf.iterrows():
-        coords = [list(c) for c in r["geometry"]]
-        u_pt = [float(r["u_cx"]), float(r["u_cy"])]
-        v_pt = [float(r["v_cx"]), float(r["v_cy"])]
-        if r["u"] == r["new_u"]:
-            mid = coords[1:]
-        elif r["v"] == r["new_v"]:
-            mid = coords[:-1]
-        else:
-            mid = coords[:]
-        if mid:
-            mm = np.array(mid, dtype=float)
-            du = geo.haversine_np(mm[:, 1], mm[:, 0], np.full(len(mm), u_pt[1]), np.full(len(mm), u_pt[0]))
-            dv = geo.haversine_np(mm[:, 1], mm[:, 0], np.full(len(mm), v_pt[1]), np.full(len(mm), v_pt[0]))
-            i1, i2 = int(np.argmin(du)), int(np.argmin(dv))
-            mid = mid[i1 : i2 + 1]
-        fwd = [u_pt] + mid + [v_pt]
-        rev = [u_pt] + list(reversed(mid)) + [v_pt]
-        lf = geo.polyline_length_m(np.array(fwd))
-        lr = geo.polyline_length_m(np.array(rev))
-        chosen = fwd if lf < lr else rev
-        lin.append([u_pt, v_pt])
-        rea.append(chosen)
-        lens.append(geo.polyline_length_m(np.array([u_pt, v_pt])))
     return lin, rea, lens

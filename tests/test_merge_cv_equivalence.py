@@ -1,8 +1,8 @@
 """Pin the r6 array-view uv-merge fold to the original pandas fold.
 
 `merge._run_uv_batches` / `_fold_group_arrays` / `_an_edge_cv` replaced the
-per-group pandas fold (`_fold_uv_group_pandas` / `_an_edge_pandas`, kept as
-the reference twin) for speed; every output value must be identical. The
+per-group pandas fold (`fold_uv_group_pandas` / `an_edge_pandas`, kept as
+the reference twin in tests/_twins.py) for speed; every output value must be identical. The
 crafted groups below force the exotic branches the synthetic city rarely
 hits: cycleway lane attributes, parking lanes, width_cycle_path weighting,
 bike-only oneway motorized loss, all-None columns, NaN bearings, self-loop
@@ -17,6 +17,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from _twins import fold_uv_group_pandas
 from osmnetfusion_spark.plans import merge
 
 COLS = [f.split(" ")[0].strip("`") for f in merge.EDGE_OUT_SCHEMA.split(", ")]
@@ -132,7 +133,7 @@ def _run_pandas_batches(it):
         body = pdf.iloc[:first_tail]
         if len(body):
             outs = [
-                merge._fold_uv_group_pandas(g.reset_index(drop=True))
+                fold_uv_group_pandas(g.reset_index(drop=True))
                 for _, g in body.groupby(["__ku", "__kv"], sort=False)
             ]
             outs = [o for o in outs if o is not None and len(o)]
@@ -141,7 +142,7 @@ def _run_pandas_batches(it):
             elif outs:
                 yield pd.concat(outs, ignore_index=True)
     if carry is not None and len(carry):
-        out = merge._fold_uv_group_pandas(carry.reset_index(drop=True))
+        out = fold_uv_group_pandas(carry.reset_index(drop=True))
         if out is not None and len(out):
             yield out
 

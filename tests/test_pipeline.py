@@ -94,48 +94,54 @@ def test_mode_filter(result):
     assert 0 < walk <= all_m
 
 
-def test_deterministic_across_parallelism_and_barriers(spark, result):
-    """Same city, 1 vs 8 shuffle partitions AND operator vs phase barrier
-    granularity -> byte-identical output (the second run varies both
-    dimensions at once)."""
+def test_deterministic_across_parallelism(spark, result):
+    """Same city, inputs in 1 partition vs the session's 8 -> byte-identical
+    output (scaling criterion)."""
     _, _, _, edges8 = result
     city = synth.synthetic_city(1)
     tables = {
         k: spark.createDataFrame(v).repartition(1) for k, v in city.items()
     }
-    _, edges1 = pipeline.run_full(spark, tables, barriers="phase")
+    _, edges1 = pipeline.run_full(spark, tables)
     a = sorted(map(str, edges8.drop("g_geo_rea", "g_geo_lin").collect()))
     b = sorted(map(str, edges1.drop("g_geo_rea", "g_geo_lin").collect()))
     assert a == b
 
 
-def test_resolve_barriers(spark, result):
-    """'auto' -> operator for durable runs and small inputs, phase above
-    the audited threshold; explicit modes pass through; the scale-1
-    module run (via the `result` fixture) recorded its resolved mode."""
-    _, m, _, _ = result
-    assert m["barriers_mode"] == "operator"  # scale 1 is far below the bar
+def test_cc_distributed_fallback_matches_driver_path(spark, monkeypatch):
+    """``driver_limit=0`` sends the contracted graph through
+    ``_cc_iterative``'s distributed label propagation instead of the
+    driver union-find; both must give the same (osmid, component) set."""
+    import inspect
 
-    small = spark.range(10)
-    big = spark.range(pipeline.AUTO_PHASE_EDGE_THRESHOLD)
-    assert pipeline.resolve_barriers("auto", None, small) == "operator"
-    assert pipeline.resolve_barriers("auto", None, big) == "phase"
-    assert pipeline.resolve_barriers("auto", object(), big) == "operator"
-    assert pipeline.resolve_barriers("phase", None, small) == "phase"
-    assert pipeline.resolve_barriers("operator", None, big) == "operator"
-    with pytest.raises(ValueError, match="unknown barriers"):
-        pipeline.resolve_barriers("bogus", None, small)
-
-
-def test_resolve_barriers_lazy_plan_never_counts(spark):
-    """ADVICE r4: a lazy multi-stage plan must not pay a full upstream
-    recomputation just to pick the barrier mode -- auto resolves it to
-    'phase' (the at-scale-safe mode) without running any job."""
-    boom = F.udf(lambda x: (_ for _ in ()).throw(RuntimeError("job ran")))
-    lazy = (
-        spark.range(100_000)
-        .withColumn("y", boom("id"))
-        .groupBy("y").count()
+    city = synth.synthetic_city(1)
+    edges = simplify.add_highway_rank(spark.createDataFrame(city["edges"]))
+    nodes = simplify.add_buffer_radius(
+        simplify.node_importance(spark.createDataFrame(city["nodes"]), edges)
     )
-    # would raise if resolve_barriers executed the plan
-    assert pipeline.resolve_barriers("auto", None, lazy) == "phase"
+    pairs = simplify._overlap_pairs(nodes).localCheckpoint()
+    want = {tuple(r) for r in simplify.connected_components(pairs, spark).collect()}
+
+    real = simplify._cc_iterative
+    seen = []
+
+    def spy(*args, **kwargs):
+        call = inspect.signature(real).bind(*args, **kwargs)
+        call.apply_defaults()
+        seen.append((call.arguments["pairs"].count(), call.arguments["driver_limit"]))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(simplify, "_cc_iterative", spy)
+    # block_steps=0: one join cell per block, so pairs cross blocks and
+    # the contracted graph is not empty (at the default no scale-1 pair
+    # crosses a block)
+    got = {
+        tuple(r)
+        for r in simplify.connected_components(
+            pairs, spark, block_steps=0, driver_limit=0
+        ).collect()
+    }
+    # the fallback ran, and on more pairs than it may solve on the driver
+    assert seen and all(n > limit for n, limit in seen)
+    assert got == want
+    assert len({c for _, c in want}) < len(want)  # real multi-node components

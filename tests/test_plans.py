@@ -237,10 +237,8 @@ def test_reassign_batch_matches_loop():
     import numpy as np
     import pandas as pd
 
-    from osmnetfusion_spark.plans.simplify import (
-        _reassign_batch,
-        _reassign_batch_loop,
-    )
+    from _twins import reassign_batch_loop
+    from osmnetfusion_spark.plans.simplify import _reassign_batch
 
     rng = np.random.RandomState(42)
     rows = []
@@ -267,7 +265,7 @@ def test_reassign_batch_matches_loop():
         )
     pdf = pd.DataFrame(rows)
     lin_v, rea_v, len_v = _reassign_batch(pdf)
-    lin_l, rea_l, len_l = _reassign_batch_loop(pdf)
+    lin_l, rea_l, len_l = reassign_batch_loop(pdf)
     assert lin_v == lin_l
     assert rea_v == rea_l          # bit-equal floats, list == is exact
     assert len_v == len_l
@@ -296,10 +294,8 @@ def test_split_fast_multi_matches_loop():
     import numpy as np
     import pandas as pd
 
-    from osmnetfusion_spark.plans.simplify import (
-        _split_fast_multi,
-        _split_rows_loop,
-    )
+    from _twins import split_rows_loop
+    from osmnetfusion_spark.plans.simplify import _split_fast_multi
 
     rng = np.random.RandomState(7)
     rows = []
@@ -331,6 +327,6 @@ def test_split_fast_multi_matches_loop():
         ))
     pdf = pd.DataFrame(rows)
     got = _split_fast_multi(pdf)
-    want = _split_rows_loop(pdf)
+    want = split_rows_loop(pdf)
     assert got == want          # same dicts, same order, bit-equal floats
     assert 10 < len(got) < 300  # accepts AND rejects both exercised

@@ -201,31 +201,95 @@ def test_salted_list_agg_matches_plain(spark):
     assert got4 == want
 
 
-def test_input_bytes_handles_uri_forms_and_fails_safe(spark, tmp_path):
-    """Broadcast size guard (_input_bytes): both file URI renderings
-    resolve; an unreadable file reads as 'too big' (inf), never as
-    'no estimate' -- None would silently re-enable the broadcast hint
-    for an unsizeable build side (ADVICE r2)."""
-    from osmnetfusion_spark.operators import spatial
+class _FakeScan:
+    """Just enough of a DataFrame for ``fan_out``: its input files, the
+    session's default parallelism, and a repartition that records the
+    call instead of planning it."""
+
+    def __init__(self, files, parallelism=128):
+        from types import SimpleNamespace
+
+        self.files = files
+        self.sparkSession = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=parallelism)
+        )
+        self.fanned = None
+
+    def inputFiles(self):
+        return self.files
+
+    def repartition(self, n, *keys):
+        self.fanned = (n, keys)
+        return self
+
+
+def test_scan_bytes_and_fan_out_size_guard(spark, tmp_path):
+    """One sizing helper (``scan_bytes``) serves both the broadcast guard
+    and ``fan_out``: both file URI renderings resolve; a remote scheme or
+    an unreadable file reads as 'too big' (inf), never as 'no estimate'
+    -- None would silently re-enable the broadcast hint for an
+    unsizeable build side -- and every file of the scan counts toward
+    the small-scan limit, not a sample of them."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from osmnetfusion_spark.operators.partitioning import (
+        SMALL_SCAN_BYTES,
+        fan_out,
+        scan_bytes,
+    )
 
     p = str(tmp_path / "sz.parquet")
-    spark.range(0, 1000).write.parquet(p)
+    spark.range(0, 1000, 1, 1).write.parquet(p)  # one file: a thin scan
     df = spark.read.parquet(p)
-    est = spatial._input_bytes(df)
+    est = scan_bytes(df)
     assert est is not None and 0 < est < 1 << 20
+    assert scan_bytes(spark.range(10)) is None  # not a file scan
 
-    import os
+    def plan(d):
+        return d._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "RepartitionByExpression [id" in plan(fan_out(df, "id"))
+    assert "Repartition " in plan(fan_out(df))  # round-robin without keys
+    built = spark.range(10).withColumn("x", F.col("id"))
+    assert fan_out(built, "id") is built  # non-file source: untouched
 
     real = [f for f in os.listdir(p) if f.endswith(".parquet")][0]
     size = os.path.getsize(os.path.join(p, real))
-    # both URI forms the JVM can emit must resolve to the same file
+    # both URI forms the JVM can emit size the same small file -- and a
+    # small scan in either form fans out
     for uri in (f"file://{p}/{real}", f"file:{p}/{real}"):
-        class Fake:
-            def inputFiles(self):
-                return [uri]
-        assert spatial._input_bytes(Fake()) == size
+        fake = _FakeScan([uri])
+        assert scan_bytes(fake) == size
+        fan_out(fake, "id")
+        assert fake.fanned == (128, ("id",)), uri
 
-    class Gone:
-        def inputFiles(self):
-            return ["file:///nonexistent/definitely/missing.parquet"]
-    assert spatial._input_bytes(Gone()) == float("inf")
+    big = str(tmp_path / "big.bin")
+    with open(big, "wb") as f:
+        f.truncate(SMALL_SCAN_BYTES + 1)  # sparse: no disk space used
+    many = tmp_path / "many"
+    many.mkdir()
+    parts = []
+    for i in range(65):  # the first 64 total exactly the limit
+        part = str(many / f"part-{i:03d}")
+        with open(part, "wb") as f:
+            f.truncate(2 << 20)
+        parts.append(f"file://{part}")
+    # none of these may fan out: a big scan in the file:/p rendering, a
+    # remote scheme (even when its bare path exists locally), an
+    # unreadable file, and a 65-file scan whose total passes the limit
+    for files, want in (
+        ([f"file:{big}"], SMALL_SCAN_BYTES + 1),
+        ([f"s3a://bucket{p}/{real}"], float("inf")),
+        (["file:///nonexistent/definitely/missing.parquet"], float("inf")),
+        (parts, 65 * (2 << 20)),
+    ):
+        fake = _FakeScan(files)
+        assert scan_bytes(fake) == want, files[0]
+        fan_out(fake, "id")
+        assert fake.fanned is None, files[0]
+    # a scan with as many files as the parallelism is already split
+    fake = _FakeScan(parts[:8], parallelism=8)
+    fan_out(fake)
+    assert fake.fanned is None

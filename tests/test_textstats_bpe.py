@@ -144,20 +144,25 @@ def test_bpe_encode_reproduces_trainer_tokens(spark):
 
 
 def test_bpe_encode_unseen_text_sequential_twin(spark):
-    """Inference on UNSEEN text matches the sequential greedy scan."""
+    """Inference on UNSEEN text matches the sequential greedy scan; a NULL
+    text keeps its row, with NULL toks and n_tokens."""
     import pandas as pd
 
     train = spark.createDataFrame(pd.DataFrame({"doc_id": [0, 1, 2],
                                                 "text": TEXTS[:3]}))
     merges_df, _ = TS.bpe_train(train, n_merges=4)
     merges = [(r.left, r.right) for r in merges_df.orderBy("round").collect()]
-    unseen = ["the cat sat on a mat on a cat", "cat cat cat the the"]
+    unseen = ["the cat sat on a mat on a cat", "cat cat cat the the", None]
     df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [10, 11], "text": unseen})
+        list(zip([10, 11, 12], unseen)), "doc_id long, text string"
     )
-    got = {r.doc_id: list(r.toks) for r in TS.bpe_encode(df, merges).collect()}
+    rows = TS.bpe_encode(df, merges).collect()
+    got = {r.doc_id: None if r.toks is None else list(r.toks) for r in rows}
+    assert {r.doc_id: r.n_tokens for r in rows}[12] is None
 
     def seq_encode(s):
+        if s is None:
+            return None
         toks = [t for t in s.split(" ") if t]
         for left, right in merges:
             out, i = [], 0
