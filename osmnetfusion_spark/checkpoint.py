@@ -4,15 +4,13 @@ The reference pipeline communicates between stages ONLY through files
 (gpkg/json/csv paths, configFile.py:52, 113-155; README.md:66 notes p3 can
 run standalone from p2's output). That file contract becomes *table
 snapshots* here: every stage writes its output table + a manifest entry;
-a restarted run skips stages whose snapshot is already committed
-(north rule: "resumable from Iceberg snapshot checkpoints with
-per-partition lineage and metrics logs").
+a restarted run skips stages whose snapshot is already committed.
 
-Storage: an Iceberg catalog is used when the runtime has one configured
-(`spark.sql.catalog.*` -- `df.writeTo(table)` path); this sandbox has no
-Iceberg jars, so the fallback is directory-per-stage parquet with an
-atomic `_MANIFEST.json` commit -- same snapshot/commit semantics
-(write-temp-then-rename), same resume behavior.
+Storage: one parquet directory per stage under the warehouse. A stage is
+written to ``<stage>.inprogress`` and renamed into place, then recorded in
+``_MANIFEST.json``, which is itself committed atomically (write a temp
+file, ``os.replace``). A stage counts as done only when its manifest
+entry and its ``_SUCCESS`` marker both exist.
 
 Lineage: per output partition we record (partition_id, rows, min/max of
 the stage key) into `<warehouse>/_lineage/<stage>.json`; metrics (rows in/

@@ -179,98 +179,6 @@ def _uniq(series) -> list:
     return seen
 
 
-def _bike_tag_any(df: pd.DataFrame) -> bool:
-    for c in BIKE_TAG_COLS:
-        if c not in df.columns:
-            continue
-        for x in _uniq(df[c]):
-            if (x is not None) and (x == x) and str(x) not in ["no", ""]:
-                return True
-    return False
-
-
-def access_walk_py(df: pd.DataFrame) -> bool:
-    """checkModeAccess('walk'), p3_functions.py:1639-1652."""
-    hw = _uniq(df.highway)
-    if any(x in WALK_HW_ALL for x in hw):
-        return True
-    if any(x in ["designated", "yes"] for x in _uniq(df.foot)):
-        return True
-    if any((x is not None) and (x == x) and x <= 50 for x in _uniq(df.maxspeed)):
-        return True
-    if any(
-        x not in ["no", ""] for x in _uniq(df.sidewalk) if (x is not None) and (x == x)
-    ):
-        return True
-    return False
-
-
-def access_bike_py(df: pd.DataFrame) -> bool:
-    """checkModeAccess('bike'), p3_functions.py:1654-1680."""
-    hw = _uniq(df.highway)
-    bic = _uniq(df.bicycle)
-    access = False
-    if any(x in BIKE_HW_ALL for x in hw) or any(x in ["yes", "designated"] for x in bic) or _bike_tag_any(df):
-        access = True
-    if all(x == "no" for x in bic):
-        access = False
-    if any(
-        str(x) != "" for x in _uniq(df.cycleway) if (x is not None) and (x == x)
-    ):
-        access = True
-    return access
-
-
-def access_motorized_py(df: pd.DataFrame) -> bool:
-    """checkModeAccess('motorized'), p3_functions.py:1682-1690."""
-    access = any(x not in NON_MOTORIZED_HW for x in _uniq(df.highway))
-    if any(df.oneway.isin(["True", True])):
-        if "bike_access" in df.columns and any(df.bike_access == "bike_only"):
-            access = False
-    return access
-
-
-# ---------------------------------------------------- per-mode row subsets
-
-
-def walk_rows(df: pd.DataFrame) -> pd.DataFrame:
-    """WalkEdge.getWalkEdges, p3_functions.py:1893-1915."""
-    hw = _uniq(df.highway)
-    if any(x in WALK_HW_STRICT for x in hw):
-        return df[df.highway.isin(WALK_HW_STRICT)]
-    if any(x == "designated" for x in _uniq(df.foot)):
-        return df[df.foot.isin(["designated", "yes"])]
-    if any(x in WALK_HW_ALL for x in hw):
-        return df[df.highway.isin(WALK_HW_ALL)]
-    return df[(df.maxspeed <= 30) | ~df.sidewalk.isin(["no", ""])]
-
-
-def bike_rows(df: pd.DataFrame) -> pd.DataFrame:
-    """BicycleEdge.getBikeEdges, p3_functions.py:2044-2071."""
-    hw = _uniq(df.highway)
-    if any(x in BIKE_HW_STRICT for x in hw) or any(
-        x in ["yes", "designated"] for x in _uniq(df.bicycle)
-    ):
-        return df[
-            (df.highway.isin(BIKE_HW_STRICT)) | (df.bicycle == "yes") | (df.bicycle == "designated")
-        ]
-    cond0 = any(x in BIKE_HW_ALL for x in hw)
-    cond3 = any(
-        str(x) != "" for x in _uniq(df.cycleway) if (x is not None) and (x == x)
-    )
-    if cond0 or _bike_tag_any(df) or cond3:
-        return df[(df.highway.isin(BIKE_HW_ALL)) | (df.cycleway != "")]
-    # reference falls off the end -> None; callers guard with access first
-    return df.iloc[0:0]
-
-
-def motorized_rows(df: pd.DataFrame) -> pd.DataFrame:
-    """MotorizedEdge.getMotorizedEdges, p3_functions.py:2107-2120."""
-    if any(x not in NON_MOTORIZED_HW for x in _uniq(df.highway)):
-        return df[~df.highway.isin(NON_MOTORIZED_HW)]
-    return df
-
-
 # ----------------------------------------------------- bike attribute fold
 
 _BIKE_ATTR_RANK = ["no", "track", "lane", "advisory", "exclusive.", "exclusive"]
@@ -320,26 +228,8 @@ def cycleway_attributes_py(df: pd.DataFrame) -> list:
     return sorted(set(flat))
 
 
-def parking_py(df: pd.DataFrame) -> tuple[list, list]:
-    """AnEdge.hasParking, p3_functions.py:1606-1624."""
-    bad = ["no", "no_stopping", "fire_lane", ""]
-
-    def vals(col):
-        if col not in df.columns:
-            return []
-        return [
-            a
-            for a in _uniq(df[col])
-            if (a not in bad) and (a is not None) and (a == a)
-        ]
-
-    left = vals("parking:lane:left") + vals("parking:lane:both")
-    right = vals("parking:lane:right") + vals("parking:lane:both")
-    return sorted(set(left)), sorted(set(right))
-
-
 # --------------------------------------------- array-view (cv) fold twins
-# The pandas helpers above operate on per-group DataFrames; at 30k+ groups
+# The pandas helpers operate on per-group DataFrames; at 30k+ groups
 # the per-group Series/DataFrame boxing dominated the merge stage (~19 ms
 # per 2-row group, guide §4.2). The `_cv` twins below implement the SAME
 # value semantics over a lightweight column-dict view (`merge._GroupView`)
@@ -350,8 +240,8 @@ def parking_py(df: pd.DataFrame) -> tuple[list, list]:
 #                               True in both, NaN != NaN is True in both)
 # - float-Series <= x        -> numpy compare (NaN -> False in both)
 # - Series.max() skipna      -> _nanmax
-# The pandas versions remain for merge_nodes and for tests that pin the
-# truth tables; test_merge_cv_equivalence pins cv == pandas on the same
+# The pandas mode-access, row-subset and parking twins live in
+# tests/_twins.py; test_merge_cv_equivalence pins cv == pandas on the same
 # groups.
 
 

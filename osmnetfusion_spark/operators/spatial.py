@@ -28,7 +28,7 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import h3idx
@@ -144,7 +144,7 @@ def cover_bbox_cells(
 # ------------------------------------------------------------------ kNN join
 
 
-def knn1_join_segments_cellfold(
+def knn_join_segments(
     points: DataFrame,
     segments: DataFrame,
     radius_m: float,
@@ -156,16 +156,31 @@ def knn1_join_segments_cellfold(
     carry: tuple[str, ...] = (),
     flat_kx: float | None = None,
 ) -> DataFrame:
-    """kNN(1) with a single map-side-combinable aggregation.
+    """kNN(1) (<= radius_m) join of points to polyline *segments*.
+
+    ``segments`` must carry ``ax, ay, bx, by`` (from
+    :func:`explode_segments`). Returns one row per matched point with
+    ``seg_id``, ``dist_m`` and ``knn_rank`` (always 1). Deterministic ties:
+    ``(dist_m, seg_id)``.
+
+    Replaces the reference's ``sjoin_nearest(max_distance=...)`` snaps
+    (signals->nodes 20 m ``p2_enrichData.py:453``, amenities->edges 200 m
+    ``:541``, PT stops->edges 30 m ``:590``) and the graft's pages->edges
+    snap; each takes only the nearest match.
 
     Plan: build side exploded to ring-1-dilated cover cells (small; stays
     under the broadcast threshold, so the candidate join is SHUFFLE-FREE
     and the per-candidate distance runs inside whole-stage codegen), then
     ONE ``groupBy(point).agg(min(struct(dist, seg_id)))`` -- lexicographic
     struct-min IS the kNN(1) rule, and partial aggregation collapses each
-    map partition to ~one row per point before the only shuffle. Replaces
-    the groupBy-per-entity + window plan (two wide shuffles) with identical
-    results.
+    map partition to ~one row per point before the only shuffle. The probe
+    side is never exploded.
+
+    ``broadcast_build``: hint when the SEGMENTS side is known small (the
+    simplified network vs a page corpus). Pass False when the segments
+    side scales with the network (enrichment joins: layer points probe a
+    planet-sized network) -- the plain equi-join lets AQE pick the
+    broadcast side from runtime sizes.
     """
     res = h3idx.pick_res(radius_m)
     m = F.lit(geo.M_PER_DEG)
@@ -235,60 +250,6 @@ def knn1_join_segments_cellfold(
     )
 
 
-def knn_join_segments(
-    points: DataFrame,
-    segments: DataFrame,
-    radius_m: float,
-    k: int = 1,
-    point_id: str = "point_id",
-    seg_id: str = "edge_id",
-    lat: str = "lat",
-    lon: str = "lon",
-    broadcast_build: bool = True,
-    carry: tuple[str, ...] = (),
-    flat_kx: float | None = None,
-) -> DataFrame:
-    """kNN (<= radius_m) join of points to polyline *segments*.
-
-    ``segments`` must carry ``ax, ay, bx, by`` (from
-    :func:`explode_segments`). Returns one row per (point, matched entity)
-    with ``dist_m`` and ``knn_rank`` (1 = nearest). Deterministic ties:
-    ``(dist_m, seg_id)``.
-
-    Replaces the reference's ``sjoin_nearest(max_distance=...)`` snaps
-    (signals->nodes 20 m ``p2_enrichData.py:453``, amenities->edges 200 m
-    ``:541``, PT stops->edges 30 m ``:590``) and the graft's pages->edges
-    snap. Plan shape: build-side cover explode (dilated ring-1) -> equi-join
-    on cell -> closed-form distance -> per-entity min -> per-point top-k
-    window. The probe side is never exploded, so the shuffle volume is
-    O(|points| + |segments| * cover_cells).
-
-    k=1 dispatches to :func:`knn1_join_segments_cellfold` (identical
-    results, no candidate shuffle at all).
-
-    ``broadcast_build``: hint when the SEGMENTS side is known small (the
-    simplified network vs a page corpus). Pass False when the segments
-    side scales with the network (enrichment joins: layer points probe a
-    planet-sized network) -- the plain equi-join lets AQE pick the
-    broadcast side from runtime sizes.
-    """
-    if k == 1:
-        return knn1_join_segments_cellfold(
-            points, segments, radius_m,
-            point_id=point_id, seg_id=seg_id, lat=lat, lon=lon,
-            broadcast_build=broadcast_build, carry=carry, flat_kx=flat_kx,
-        )
-    assert not carry, "carry is only supported on the k=1 cellfold path"
-    per_entity = radius_join_segments(
-        points, segments, radius_m,
-        point_id=point_id, seg_id=seg_id, lat=lat, lon=lon,
-        broadcast_build=broadcast_build, flat_kx=flat_kx,
-    )
-    w = Window.partitionBy(point_id).orderBy(F.col("dist_m").asc(), F.col(seg_id).asc())
-    ranked = per_entity.withColumn("knn_rank", F.row_number().over(w))
-    return ranked.filter(F.col("knn_rank") <= k)
-
-
 def radius_join_segments(
     points: DataFrame,
     segments: DataFrame,
@@ -305,11 +266,10 @@ def radius_join_segments(
 
     This is the radius half of the reference's amenity join
     (``p2_enrichData.py:536-552`` -- every edge within 200 m gets
-    ``amenity_nearby``). Unlike :func:`knn_join_segments` with a huge ``k``,
-    there is NO per-point ranking window: dense cells don't pay a
-    ``row_number`` over every in-radius candidate. Callers that also need a
-    nearest-entity flag should take it from the k=1 cellfold and join the
-    two aggregates (both shuffles are on the same keys and combiner-friendly).
+    ``amenity_nearby``). There is no per-point ranking: every in-radius
+    entity is kept. Callers that also need a nearest-entity flag take it
+    from :func:`knn_join_segments` and join the two aggregates (both
+    shuffles are on the same keys and combiner-friendly).
     """
     res = h3idx.pick_res(radius_m)
     build = segments.withColumn(
@@ -357,7 +317,6 @@ def knn_join_segments_adaptive(
     points: DataFrame,
     segments: DataFrame,
     radii: tuple[float, ...] = (25.0, 200.0),
-    k: int = 1,
     point_id: str = "point_id",
     seg_id: str = "edge_id",
     lat: str = "lat",
@@ -373,12 +332,10 @@ def knn_join_segments_adaptive(
     radius -- typically a few percent. The result is identical to a
     single-pass kNN at the largest radius because any match within radius
     r_i is by definition the global nearest within r_j > r_i as well.
-    Correctness caveat: identical only for k=1 (enforced).
     """
-    assert k == 1, "adaptive cascade preserves exactness only for k=1"
     return _cascade(
         lambda remaining, r: knn_join_segments(
-            remaining, segments, radius_m=r, k=1,
+            remaining, segments, radius_m=r,
             point_id=point_id, seg_id=seg_id, lat=lat, lon=lon, carry=carry,
         ),
         points, radii, point_id,
@@ -410,7 +367,7 @@ def knn_join_points_adaptive(
     """
     return _cascade(
         lambda remaining, r: knn_join_points(
-            remaining, build, radius_m=r, k=1,
+            remaining, build, radius_m=r,
             probe_id=probe_id, build_id=build_id,
             probe_lat=probe_lat, probe_lon=probe_lon,
             build_lat=build_lat, build_lon=build_lon,
@@ -423,18 +380,16 @@ def knn_join_points(
     probe: DataFrame,
     build: DataFrame,
     radius_m: float,
-    k: int = 1,
     probe_id: str = "probe_id",
     build_id: str = "build_id",
     probe_lat: str = "lat",
     probe_lon: str = "lon",
     build_lat: str = "lat",
     build_lon: str = "lon",
-    exclude_same_id: bool = False,
 ) -> DataFrame:
-    """kNN (<= radius_m) point-to-point join (signals -> nearest node).
+    """kNN(1) (<= radius_m) point-to-point join (signals -> nearest node).
 
-    k=1 runs as a struct-min over ``(dist_m, build_id, *probe columns)``
+    Runs as a struct-min over ``(dist_m, build_id, *probe columns)``
     per ``probe_id``. This assumes ``probe_id`` is unique in ``probe``:
     probe rows sharing an id form one group, and at a (dist, build_id)
     tie the probe columns themselves decide which row's values are
@@ -460,40 +415,32 @@ def knn_join_points(
         geo.haversine_m(F.col(probe_lat), F.col(probe_lon), F.col("__blat"), F.col("__blon")),
     )
     cand = cand.filter(F.col("dist_m") <= F.lit(float(radius_m)))
-    if exclude_same_id:
-        cand = cand.filter(F.col(probe_id) != F.col("__bid"))
-    probe_cols = [c for c in probe.columns]
-    if k == 1:
-        # kNN(1) = lexicographic struct-min on (dist, build_id) -- a
-        # map-side-combinable aggregate that collapses every cell's
-        # candidate product to one row per probe BEFORE the shuffle,
-        # replacing the row_number window (shuffle + per-probe sort over
-        # all in-radius candidates; measured 17 s -> ~2 s on the 50k x 10k
-        # signal snap). Tie-break identical to the window's
-        # (dist asc, build_id asc); probe columns are constant per group
-        # and ride the fold. Guide §2.3 "aggregate before you shuffle".
-        extra = [c for c in probe_cols if c != probe_id]
-        best = cand.groupBy(probe_id).agg(
-            F.min(
-                F.struct(
-                    F.col("dist_m").alias("d"),
-                    F.col("__bid").alias("b"),
-                    *[F.col(c).alias(f"c_{c}") for c in extra],
-                )
-            ).alias("__best")
-        )
-        return best.select(
-            *[
-                F.col(f"__best.c_{c}").alias(c) if c != probe_id else F.col(probe_id)
-                for c in probe_cols
-            ],
-            F.col("__best.b").alias(build_id),
-            F.col("__best.d").alias("dist_m"),
-            F.lit(1).alias("knn_rank"),
-        )
-    w = Window.partitionBy(probe_id).orderBy(F.col("dist_m").asc(), F.col("__bid").asc())
-    out = cand.withColumn("knn_rank", F.row_number().over(w)).filter(F.col("knn_rank") <= k)
-    return out.withColumnRenamed("__bid", build_id).drop("__blat", "__blon", "cell")
+    # kNN(1) = lexicographic struct-min on (dist, build_id) -- a
+    # map-side-combinable aggregate that collapses every cell's candidate
+    # product to one row per probe BEFORE the shuffle (measured 17 s ->
+    # ~2 s against a row_number window on the 50k x 10k signal snap).
+    # Ties break on (dist asc, build_id asc); probe columns are constant
+    # per group and ride the fold.
+    probe_cols = list(probe.columns)
+    extra = [c for c in probe_cols if c != probe_id]
+    best = cand.groupBy(probe_id).agg(
+        F.min(
+            F.struct(
+                F.col("dist_m").alias("d"),
+                F.col("__bid").alias("b"),
+                *[F.col(c).alias(f"c_{c}") for c in extra],
+            )
+        ).alias("__best")
+    )
+    return best.select(
+        *[
+            F.col(f"__best.c_{c}").alias(c) if c != probe_id else F.col(probe_id)
+            for c in probe_cols
+        ],
+        F.col("__best.b").alias(build_id),
+        F.col("__best.d").alias("dist_m"),
+        F.lit(1).alias("knn_rank"),
+    )
 
 
 # -------------------------------------------------------- point-in-polygon

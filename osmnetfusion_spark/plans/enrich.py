@@ -60,14 +60,14 @@ def _contains(df: DataFrame, col: str, sub: str) -> Column:
 # --------------------------------------------------------------- J1/J2/J3
 
 
-def landuse_ratio(
+def landuse_ratio_all(
     edges: DataFrame,
-    layer: DataFrame,
-    kind: str,
+    layers: list[tuple[str, DataFrame]],
     point_buffer_m: float = 10.0,
     poly_buffer_m: float = 5.0,
 ) -> DataFrame:
-    """Green/retail/building ratio per edge (p2_enrichData.py:61-156).
+    """Green/retail/building ratio per edge (p2_enrichData.py:61-156), all
+    land-use kinds in ONE pass. For each ``(kind, layer)``:
 
     - point part: layer points within ``point_buffer_m`` of the edge
       (reference: point-in-10m-edge-buffer) -> count; ratio_point =
@@ -79,78 +79,13 @@ def landuse_ratio(
 
     Adds columns {kind}_points, {kind}_ratio_point, {kind}_ratio_poly,
     {kind}_ratio. ``edges`` must carry edge_id, length, geometry.
-    """
-    segs = spatial.explode_segments(edges.select("edge_id", "geometry")).select(
-        "edge_id", "seg_idx", "ax", "ay", "bx", "by"
-    )
 
-    pts = layer.filter(F.col("geom_type") == "Point").select(
-        F.col("layer_id"),
-        F.element_at(F.col("geometry"), 1)[1].alias("lat"),
-        F.element_at(F.col("geometry"), 1)[0].alias("lon"),
-    )
-    # point within buffer <=> dist(point, polyline) <= buffer
-    # Membership-only: radius join has no per-point ranking window, so
-    # dense cells don't pay a row_number over every in-radius candidate
-    # (same redesign as add_bicycle_parking, round 2).
-    near = spatial.radius_join_segments(
-        pts, segs, radius_m=point_buffer_m,
-        point_id="layer_id", seg_id="edge_id", broadcast_build=False,
-    )
-    pt_counts = near.groupBy("edge_id").agg(F.count(F.lit(1)).alias(f"{kind}_points"))
-
-    polys = layer.filter(
-        F.col("geom_type").isin("Polygon", "MultiPolygon")
-    ).select(
-        "layer_id",
-        _dilate_rect(F.col("geometry"), poly_buffer_m).alias("geometry"),
-    )
-    isect = spatial.intersection_length_join(
-        segs, polys, seg_id="edge_id", poly_id="layer_id"
-    )
-
-    out = (
-        edges.join(pt_counts, "edge_id", "left")
-        .withColumn(f"{kind}_points", F.coalesce(f"{kind}_points", F.lit(0)).cast("double"))
-        .withColumn(
-            f"{kind}_ratio_point",
-            F.least(F.col(f"{kind}_points") * 5.0 / F.col("length"), F.lit(1.0)),
-        )
-    )
-    poly_ratio = (
-        isect.join(edges.select("edge_id", "length"), "edge_id")
-        .groupBy("edge_id")
-        # reference accumulates min(acc + ratio, 1) per polygon in input
-        # order; since every term is >=0 the result equals min(sum, 1)
-        .agg(F.least(F.sum(F.col("isect_len_m") / F.col("length")), F.lit(1.0)).alias(f"{kind}_ratio_poly"))
-    )
-    out = (
-        out.join(poly_ratio, "edge_id", "left")
-        .withColumn(f"{kind}_ratio_poly", F.coalesce(f"{kind}_ratio_poly", F.lit(0.0)))
-        .withColumn(
-            f"{kind}_ratio",
-            F.least(F.col(f"{kind}_ratio_point") + F.col(f"{kind}_ratio_poly"), F.lit(1.0)),
-        )
-    )
-    return out
-
-
-def landuse_ratio_all(
-    edges: DataFrame,
-    layers: list[tuple[str, DataFrame]],
-    point_buffer_m: float = 10.0,
-    poly_buffer_m: float = 5.0,
-) -> DataFrame:
-    """All land-use kinds in ONE pass (fused :func:`landuse_ratio`).
-
-    The reference runs green/retail/building sequentially
-    (p2_enrichData.py:724-726); each pass re-scans and re-shuffles the full
-    edges table. Fusing unions the (small) layer tables under a composite
-    id, does one segment explode + one kNN join + one intersection join,
-    and pivots per-kind aggregates back out -- per-kind results are grouped
-    independently, so the outputs are bit-identical to three passes while
-    the big-table work (scan, explode, shuffle) happens once. At planet
-    scale this turns 3 passes over billions of edges into 1.
+    The reference runs the kinds sequentially (p2_enrichData.py:724-726);
+    each pass re-scans and re-shuffles the full edges table. Here the
+    (small) layer tables are unioned under a composite id, and one segment
+    explode, one radius join and one intersection join serve every kind;
+    per-kind aggregates are grouped independently and pivoted back out, so
+    each kind's result equals a pass over its layer alone.
     """
     kind_base = 1_000_000_000
     kinds = [k for k, _ in layers]
@@ -452,7 +387,6 @@ def add_traffic_lights(nodes: DataFrame, signals: DataFrame) -> DataFrame:
         sig.select("sig_osmid", "lat", "lon"),
         nodes.select(F.col("osmid").alias("node_osmid"), F.col("y").alias("lat"), F.col("x").alias("lon")),
         radius_m=20.0,
-        k=1,
         probe_id="sig_osmid",
         build_id="node_osmid",
     ).filter(F.col("sig_osmid") != F.col("node_osmid"))
@@ -496,13 +430,13 @@ def add_bicycle_parking(edges: DataFrame, amenities: DataFrame) -> DataFrame:
     names = amenities.select("amenity_id", "amenity")
     # dedicated radius membership (no per-amenity ranking window over every
     # in-radius candidate -- dense cells would pay it for nothing) + the
-    # nearest flag from the shuffle-light k=1 cellfold
+    # nearest flag from the shuffle-light kNN(1) struct-min
     near = spatial.radius_join_segments(
         pts, segs, radius_m=200.0,
         point_id="amenity_id", seg_id="edge_id", broadcast_build=False,
     ).join(names, "amenity_id")
     nearest = spatial.knn_join_segments(
-        pts, segs, radius_m=200.0, k=1,
+        pts, segs, radius_m=200.0,
         point_id="amenity_id", seg_id="edge_id", broadcast_build=False,
     ).join(names, "amenity_id")
 
@@ -559,7 +493,7 @@ def add_pt_stops(edges: DataFrame, stops: DataFrame) -> DataFrame:
         F.concat_ws("/", "member_ref", "name").alias("stop_id"), "member_ref", "name", "lat", "lon"
     ).dropDuplicates(["stop_id"])
     snapped = spatial.knn_join_segments(
-        stops_k, segs, radius_m=30.0, k=1, point_id="stop_id", seg_id="edge_id",
+        stops_k, segs, radius_m=30.0, point_id="stop_id", seg_id="edge_id",
         broadcast_build=False,
     ).join(stops_k.select("stop_id", "name"), "stop_id")
     per_edge = snapped.groupBy("edge_id").agg(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import folds
 from ..functions.tags import clean_float_col
+from ..operators.groupedmap import cluster_by, complete_groups, concat_outputs, grouped_map_batched
 
 
 def py_list_str(l) -> str:
@@ -84,12 +85,12 @@ def merge_nodes(nodes: DataFrame) -> DataFrame:
             ]
         )
 
-    from ..operators.groupedmap import grouped_map_batched
-
     return grouped_map_batched(nodes, ["merged_by"], fold, NODE_OUT_SCHEMA)
 
 
 # ------------------------------------------------------------------ step 11
+
+_UV_KEYS = ["__ku", "__kv"]
 
 EDGE_OUT_SCHEMA = (
     "g_u long, g_v long, g_id long, g_lit boolean, g_incline string, "
@@ -312,25 +313,21 @@ def _fold_group_arrays(d: dict, lo: int, hi: int) -> list[dict]:
 
 
 def _run_uv_batches(it):
-    """mapInPandas runner for step 11: same carry protocol as
-    grouped_map_batched (groups are contiguous after the repartition+sort;
-    the final, possibly incomplete group of each batch carries over), but
-    each batch converts to a column-dict of numpy arrays ONCE and the
-    groups are processed as array slices. Per-group OUTPUT construction is
-    byte-identical to the old fold (pd.DataFrame(recs) -> missing schema
-    cols as None -> concat per batch), so dtype/null semantics through the
-    Arrow boundary are unchanged."""
-    import warnings
-
+    """mapInPandas runner for step 11 over :func:`cluster_by` partitions.
+    Bodies of complete (__ku, __kv) groups come from
+    :func:`complete_groups`; each body converts to a column-dict of numpy
+    arrays ONCE and the groups are processed as array slices. Per-group
+    OUTPUT construction matches the pandas twin
+    (``tests/_twins.py::fold_uv_group_pandas``): pd.DataFrame(recs) ->
+    missing schema cols as None -> one concat per body, so dtype/null
+    semantics through the Arrow boundary are the same."""
     cols = [f.split(" ")[0].strip("`") for f in EDGE_OUT_SCHEMA.split(", ")]
-
-    def fold_body(body: pd.DataFrame):
+    for body in complete_groups(it, _UV_KEYS):
         d = {c: body[c].to_numpy() for c in body.columns}
         ku, kv = d["__ku"], d["__kv"]
-        n = len(body)
         bounds = np.flatnonzero((ku[1:] != ku[:-1]) | (kv[1:] != kv[:-1])) + 1
         starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [n]])
+        ends = np.concatenate([bounds, [len(body)]])
         frames = []
         for lo, hi in zip(starts, ends):
             recs = _fold_group_arrays(d, int(lo), int(hi))
@@ -340,30 +337,7 @@ def _run_uv_batches(it):
                     if c not in out.columns:
                         out[c] = None
                 frames.append(out[cols])
-        if len(frames) == 1:
-            yield frames[0]
-        elif frames:
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore", FutureWarning)
-                yield pd.concat(frames, ignore_index=True)
-
-    carry: pd.DataFrame | None = None
-    for pdf in it:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-        if not len(pdf):
-            continue
-        ku = pdf["__ku"].to_numpy()
-        kv = pdf["__kv"].to_numpy()
-        tail_mask = (ku == ku[-1]) & (kv == kv[-1])
-        first_tail = int(tail_mask.argmax()) if tail_mask.any() else len(pdf)
-        carry = pdf.iloc[first_tail:]
-        body = pdf.iloc[:first_tail]
-        if len(body):
-            yield from fold_body(body)
-    if carry is not None and len(carry):
-        yield from fold_body(carry.reset_index(drop=True))
+        yield from concat_outputs(frames)
 
 
 def merge_edges(edges: DataFrame) -> DataFrame:
@@ -402,12 +376,7 @@ def merge_edges(edges: DataFrame) -> DataFrame:
             if f.dataType.simpleString() == "string"
         }
     )
-    spark = prepped.sparkSession
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    rp = prepped.repartition(num_partitions, "__ku", "__kv").sortWithinPartitions(
-        "__ku", "__kv"
-    )
-    return rp.mapInPandas(_run_uv_batches, schema=EDGE_OUT_SCHEMA)
+    return cluster_by(prepped, _UV_KEYS).mapInPandas(_run_uv_batches, schema=EDGE_OUT_SCHEMA)
 
 
 # --------------------------------------------------------------- steps 12/13

@@ -152,13 +152,13 @@ def snap_pages_to_edges(
     was a second full-table shuffle for two doubles.
 
     Uses the multi-resolution cascade (fine cells first, escalate the
-    unmatched tail) -- exact for k=1, and immune to the dense-cell
+    unmatched tail) -- exact for kNN(1), and immune to the dense-cell
     candidate blow-up at the wide radius.
     """
     ladder = [25.0, 60.0, radius_m]
     radii = tuple(r for r in ladder if r < radius_m) + (radius_m,)
     return spatial.knn_join_segments_adaptive(
-        pages, edge_segments, radii=radii, k=1,
+        pages, edge_segments, radii=radii,
         point_id="url", seg_id="edge_id", carry=("lat", "lon"),
     ).select("url", "edge_id", "dist_m", "lat", "lon")
 

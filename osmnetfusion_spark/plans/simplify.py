@@ -581,70 +581,16 @@ def cluster_nodes(
 # ------------------------------------------------------------------ step 6
 
 
-def _split_fast_2pt(pdf: pd.DataFrame) -> list[dict]:
-    """Vectorized refinement for single-segment edges (the common
-    case after split_curves): all candidate rows at once, ragged
-    member-disk lists flattened with a row-index gather. Element
-    arithmetic is IDENTICAL to the per-row loop
-    (``tests/_twins.py::split_rows_loop``) -- same kernels, same
-    comparison order -- so results are bit-equal
-    (pinned by the q_split_in_buffers contract, whose field is all
-    2-point edges, plus golden/parity over mixed geometries)."""
-    n = len(pdf)
-    g = pdf["geometry"].to_numpy()
-    ax = np.array([r[0][0] for r in g]); ay = np.array([r[0][1] for r in g])
-    bx = np.array([r[1][0] for r in g]); by = np.array([r[1][1] for r in g])
-    ring = (ax == bx) & (ay == by)
-    counts = np.array([len(d) for d in pdf["disks"]])
-    ridx = np.repeat(np.arange(n), counts)
-    dx = np.array([d["x"] for ds in pdf["disks"] for d in ds])
-    dy = np.array([d["y"] for ds in pdf["disks"] for d in ds])
-    dr = np.array([d["buf_r"] for ds in pdf["disks"] for d in ds])
-    # endpoint-inside-any-disk reject (reference :538)
-    in0 = geo.haversine_np(ay[ridx], ax[ridx], dy, dx) <= dr
-    in1 = geo.haversine_np(by[ridx], bx[ridx], dy, dx) <= dr
-    bad = np.zeros(n, dtype=bool)
-    np.logical_or.at(bad, ridx, in0 | in1)
-    # segment-intersects-any-disk requirement
-    dseg = geo.point_segment_dist_np(dy, dx, ay[ridx], ax[ridx], by[ridx], bx[ridx])
-    hit = np.zeros(n, dtype=bool)
-    np.logical_or.at(hit, ridx, dseg <= dr)
-    # nearest segment point to the cluster centroid
-    px = pdf["ccx"].to_numpy(dtype=float); py = pdf["ccy"].to_numpy(dtype=float)
-    kx = np.cos(np.radians(py)) * geo.M_PER_DEG
-    ky = geo.M_PER_DEG
-    apx, apy = (px - ax) * kx, (py - ay) * ky
-    abx, aby = (bx - ax) * kx, (by - ay) * ky
-    ab2 = abx * abx + aby * aby
-    t = np.where(ab2 > 0, (apx * abx + apy * aby) / np.where(ab2 > 0, ab2, 1), 0.0)
-    t = np.clip(t, 0.0, 1.0)
-    sx, sy = ax + t * (bx - ax), ay + t * (by - ay)
-    at_end = ((np.abs(sx - ax) < 1e-12) & (np.abs(sy - ay) < 1e-12)) | (
-        (np.abs(sx - bx) < 1e-12) & (np.abs(sy - by) < 1e-12)
-    )
-    ok = ~ring & ~bad & hit & ~at_end
-    seg_len = geo.haversine_np(ay, ax, by, bx)
-    pos = t * seg_len
-    eids = pdf["eid"].to_numpy()
-    mbs = pdf["merged_by"].to_numpy()
-    return [
-        {"eid": int(eids[i]), "seg_i": 0, "t": float(t[i]),
-         "sx": float(sx[i]), "sy": float(sy[i]), "pos": float(pos[i]),
-         "mb": int(mbs[i])}
-        for i in np.flatnonzero(ok)
-    ]
-
-
-def _split_fast_multi(pdf: pd.DataFrame) -> list[dict]:
-    """Vectorized refinement for multi-point polylines: the ragged
-    ``np.repeat`` row-index gather of :func:`_split_fast_2pt` extended to
-    two ragged axes (segments-per-edge and disks-per-cluster, crossed at
-    the pair level for the intersects-any-disk test). Element arithmetic,
-    comparison order, per-row first-argmin, and the prefix-sum shape of
-    ``pos`` are IDENTICAL to ``tests/_twins.py::split_rows_loop`` -- the
-    per-row reference twin -- so results are bit-equal (pinned by
-    ``tests/test_plans.py::test_split_fast_multi_matches_loop`` plus the
-    golden/parity suites over mixed geometries)."""
+def _split_fast(pdf: pd.DataFrame) -> list[dict]:
+    """Vectorized step-6 refinement over polylines of >= 2 points: all
+    candidate rows at once, with two ragged axes (segments-per-edge and
+    disks-per-cluster) flattened by ``np.repeat`` row-index gathers and
+    crossed at the pair level for the intersects-any-disk test. Element
+    arithmetic, comparison order, per-row first-argmin, and the prefix-sum
+    shape of ``pos`` are IDENTICAL to ``tests/_twins.py::split_rows_loop``
+    -- the per-row reference twin -- so results are bit-equal (pinned by
+    ``tests/test_plans.py::test_split_fast_matches_loop`` plus the
+    q_split_in_buffers contract and the golden/parity suites)."""
     n = len(pdf)
     if n == 0:
         return []
@@ -797,19 +743,12 @@ def split_edges_in_buffers(edges: DataFrame, nodes: DataFrame) -> DataFrame:
 
     def find_splits(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = []
-            n_pts = pdf["geometry"].map(len)
-            two_pt = n_pts == 2
-            if two_pt.any():
-                rows.extend(_split_fast_2pt(pdf[two_pt]))
             # degenerate (<2-point) geometries are skipped: a 1-point
             # "line" is a trivial ring (coords[0]==coords[-1], the
             # reference's :534 skip) and a 0-point one has nothing to
             # split -- routing them into the batch kernel would break
             # its ragged reduceat partitioning
-            multi = pdf[n_pts >= 3]
-            if len(multi):
-                rows.extend(_split_fast_multi(multi))
+            rows = _split_fast(pdf[pdf["geometry"].map(len) >= 2])
             yield pd.DataFrame(
                 rows, columns=["eid", "seg_i", "t", "sx", "sy", "pos", "mb"]
             ) if rows else pd.DataFrame(
@@ -993,7 +932,7 @@ def reassign_nodes(edges: DataFrame, nodes: DataFrame) -> DataFrame:
 def _reassign_batch(pdf: pd.DataFrame) -> tuple[list, list, list]:
     """Batch kernel for step 8 (all rows at once, ragged polylines
     flattened with the same ``np.repeat`` row-index gather as
-    ``_fast_2pt``). Element arithmetic, comparison order, and per-row
+    :func:`_split_fast`). Element arithmetic, comparison order, and per-row
     summation shape are IDENTICAL to ``tests/_twins.py::reassign_batch_loop``
     -- the per-row reference twin -- so outputs are bit-equal (pinned by
     ``tests/test_plans.py::test_reassign_batch_matches_loop`` and the

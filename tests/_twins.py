@@ -6,10 +6,15 @@ output between the two.
 - :func:`an_edge_pandas` / :func:`fold_uv_group_pandas`: the pandas
   parallel-edge fold, twin of ``merge._an_edge_cv`` /
   ``merge._fold_group_arrays`` (tests/test_merge_cv_equivalence.py);
-- :func:`split_rows_loop`: twin of ``simplify._split_fast_multi``
-  (tests/test_plans.py::test_split_fast_multi_matches_loop);
+- :func:`split_rows_loop`: twin of ``simplify._split_fast``
+  (tests/test_plans.py::test_split_fast_matches_loop);
 - :func:`reassign_batch_loop`: twin of ``simplify._reassign_batch``
-  (tests/test_plans.py::test_reassign_batch_matches_loop).
+  (tests/test_plans.py::test_reassign_batch_matches_loop);
+- :func:`access_walk_py` / :func:`access_bike_py` /
+  :func:`access_motorized_py`, :func:`walk_rows` / :func:`bike_rows` /
+  :func:`motorized_rows` and :func:`parking_py`: pandas twins of the
+  ``folds.*_cv`` mode helpers, used by :func:`an_edge_pandas` and the
+  reference-parity tally (tests/test_reference_parity.py).
 """
 
 from __future__ import annotations
@@ -18,6 +23,15 @@ import numpy as np
 import pandas as pd
 
 from osmnetfusion_spark.functions import folds, geo
+from osmnetfusion_spark.functions.folds import (
+    BIKE_HW_ALL,
+    BIKE_HW_STRICT,
+    BIKE_TAG_COLS,
+    NON_MOTORIZED_HW,
+    WALK_HW_ALL,
+    WALK_HW_STRICT,
+    _uniq,
+)
 from osmnetfusion_spark.plans.merge import EDGE_OUT_SCHEMA, py_list_str
 
 
@@ -47,7 +61,7 @@ def an_edge_pandas(df: pd.DataFrame, main: pd.Series, uv: bool, rev_flag: bool) 
         "g_geo_rea": list(main.geom_reassigned),
         "__main_osmid": int(main.osmid),
     }
-    pl, pr = folds.parking_py(df)
+    pl, pr = parking_py(df)
     rec["g_parkingL"] = py_list_str(pl)
     rec["g_parkingR"] = py_list_str(pr)
     rec["l_id"] = py_list_str(folds.listify_py(subset.osmid, as_int=True))
@@ -58,19 +72,19 @@ def an_edge_pandas(df: pd.DataFrame, main: pd.Series, uv: bool, rev_flag: bool) 
     rec["l_highway"] = py_list_str(folds.listify_py(subset.highway))
     rec["l_hw_rank"] = py_list_str(folds.listify_py(subset.highway_rank))
 
-    rec["access_wal"] = folds.access_walk_py(subset)
-    rec["access_bik"] = folds.access_bike_py(subset)
-    rec["access_mot"] = folds.access_motorized_py(subset)
+    rec["access_wal"] = access_walk_py(subset)
+    rec["access_bik"] = access_bike_py(subset)
+    rec["access_mot"] = access_motorized_py(subset)
 
     if rec["access_wal"]:
-        wr = folds.walk_rows(df)
+        wr = walk_rows(df)
         rec["w_length"] = float(wr.length.max()) if len(wr) else None
         rec["w_surface"] = py_list_str(folds.listify_py(wr.surface))
         rec["w_smoothne"] = py_list_str(folds.listify_py(wr.smoothness))
         rec["w_segregat"] = py_list_str(folds.listify_py(wr.segregated))
         rec["w_width"] = folds.weighted_vals_py(wr.width, wr.length) if len(wr) else None
     if rec["access_bik"]:
-        br = folds.bike_rows(df)
+        br = bike_rows(df)
         if len(br):
             rec["b_length"] = float(br.length.max())
             if "cycleway:surface" in br.columns and len(br["cycleway:surface"].explode().unique()) > 1:
@@ -93,7 +107,7 @@ def an_edge_pandas(df: pd.DataFrame, main: pd.Series, uv: bool, rev_flag: bool) 
             rec["b_attribut"] = py_list_str(folds.cycleway_attributes_py(br))
             rec["b_segregat"] = py_list_str(folds.listify_py(br.segregated))
     if rec["access_mot"]:
-        mr = folds.motorized_rows(df)
+        mr = motorized_rows(df)
         rec["m_length"] = float(mr.length.max()) if len(mr) else None
         rec["m_width"] = folds.weighted_vals_py(mr.width, mr.length)
         rec["m_lanes"] = folds.weighted_vals_py(mr.lanes, mr.length)
@@ -179,8 +193,8 @@ def fold_uv_group_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def split_rows_loop(pdf: pd.DataFrame) -> list[dict]:
-    """Per-row twin of ``simplify._split_fast_multi``: the original
-    multi-point path (reference p3_functions.py:528-556)."""
+    """Per-row twin of ``simplify._split_fast``: the original per-row
+    refinement (reference p3_functions.py:528-556)."""
     rows = []
     for _, r in pdf.iterrows():
         coords = np.array([list(c) for c in r["geometry"]], dtype=float)
@@ -264,3 +278,113 @@ def reassign_batch_loop(pdf: pd.DataFrame) -> tuple[list, list, list]:
         rea.append(chosen)
         lens.append(geo.polyline_length_m(np.array([u_pt, v_pt])))
     return lin, rea, lens
+
+
+# ------------------------------------------ pandas mode-access/row twins
+
+
+def _bike_tag_any(df: pd.DataFrame) -> bool:
+    for c in BIKE_TAG_COLS:
+        if c not in df.columns:
+            continue
+        for x in _uniq(df[c]):
+            if (x is not None) and (x == x) and str(x) not in ["no", ""]:
+                return True
+    return False
+
+
+def access_walk_py(df: pd.DataFrame) -> bool:
+    """checkModeAccess('walk'), p3_functions.py:1639-1652."""
+    hw = _uniq(df.highway)
+    if any(x in WALK_HW_ALL for x in hw):
+        return True
+    if any(x in ["designated", "yes"] for x in _uniq(df.foot)):
+        return True
+    if any((x is not None) and (x == x) and x <= 50 for x in _uniq(df.maxspeed)):
+        return True
+    if any(
+        x not in ["no", ""] for x in _uniq(df.sidewalk) if (x is not None) and (x == x)
+    ):
+        return True
+    return False
+
+
+def access_bike_py(df: pd.DataFrame) -> bool:
+    """checkModeAccess('bike'), p3_functions.py:1654-1680."""
+    hw = _uniq(df.highway)
+    bic = _uniq(df.bicycle)
+    access = False
+    if any(x in BIKE_HW_ALL for x in hw) or any(x in ["yes", "designated"] for x in bic) or _bike_tag_any(df):
+        access = True
+    if all(x == "no" for x in bic):
+        access = False
+    if any(
+        str(x) != "" for x in _uniq(df.cycleway) if (x is not None) and (x == x)
+    ):
+        access = True
+    return access
+
+
+def access_motorized_py(df: pd.DataFrame) -> bool:
+    """checkModeAccess('motorized'), p3_functions.py:1682-1690."""
+    access = any(x not in NON_MOTORIZED_HW for x in _uniq(df.highway))
+    if any(df.oneway.isin(["True", True])):
+        if "bike_access" in df.columns and any(df.bike_access == "bike_only"):
+            access = False
+    return access
+
+
+def walk_rows(df: pd.DataFrame) -> pd.DataFrame:
+    """WalkEdge.getWalkEdges, p3_functions.py:1893-1915."""
+    hw = _uniq(df.highway)
+    if any(x in WALK_HW_STRICT for x in hw):
+        return df[df.highway.isin(WALK_HW_STRICT)]
+    if any(x == "designated" for x in _uniq(df.foot)):
+        return df[df.foot.isin(["designated", "yes"])]
+    if any(x in WALK_HW_ALL for x in hw):
+        return df[df.highway.isin(WALK_HW_ALL)]
+    return df[(df.maxspeed <= 30) | ~df.sidewalk.isin(["no", ""])]
+
+
+def bike_rows(df: pd.DataFrame) -> pd.DataFrame:
+    """BicycleEdge.getBikeEdges, p3_functions.py:2044-2071."""
+    hw = _uniq(df.highway)
+    if any(x in BIKE_HW_STRICT for x in hw) or any(
+        x in ["yes", "designated"] for x in _uniq(df.bicycle)
+    ):
+        return df[
+            (df.highway.isin(BIKE_HW_STRICT)) | (df.bicycle == "yes") | (df.bicycle == "designated")
+        ]
+    cond0 = any(x in BIKE_HW_ALL for x in hw)
+    cond3 = any(
+        str(x) != "" for x in _uniq(df.cycleway) if (x is not None) and (x == x)
+    )
+    if cond0 or _bike_tag_any(df) or cond3:
+        return df[(df.highway.isin(BIKE_HW_ALL)) | (df.cycleway != "")]
+    # reference falls off the end -> None; callers guard with access first
+    return df.iloc[0:0]
+
+
+def motorized_rows(df: pd.DataFrame) -> pd.DataFrame:
+    """MotorizedEdge.getMotorizedEdges, p3_functions.py:2107-2120."""
+    if any(x not in NON_MOTORIZED_HW for x in _uniq(df.highway)):
+        return df[~df.highway.isin(NON_MOTORIZED_HW)]
+    return df
+
+
+def parking_py(df: pd.DataFrame) -> tuple[list, list]:
+    """AnEdge.hasParking, p3_functions.py:1606-1624."""
+    bad = ["no", "no_stopping", "fire_lane", ""]
+
+    def vals(col):
+        if col not in df.columns:
+            return []
+        return [
+            a
+            for a in _uniq(df[col])
+            if (a not in bad) and (a is not None) and (a == a)
+        ]
+
+    left = vals("parking:lane:left") + vals("parking:lane:both")
+    right = vals("parking:lane:right") + vals("parking:lane:both")
+    return sorted(set(left)), sorted(set(right))

@@ -13,3 +13,4 @@ def spark():
     s = get_session(app_name="osmnetfusion-tests", master="local[4]", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+    s.stop()

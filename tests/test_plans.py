@@ -136,13 +136,13 @@ def test_broadcast_guard_blocks_large_build(spark, tmp_path, monkeypatch):
     pts = DC.doc_points(spark, SF).select("doc_id", "lat", "lon")
     # small file, default guard: hint honored
     df = SP.knn_join_segments(
-        pts, file_segs, radius_m=100.0, k=1, point_id="doc_id", seg_id="edge_id"
+        pts, file_segs, radius_m=100.0, point_id="doc_id", seg_id="edge_id"
     )
     assert "BroadcastHashJoin" in plan_of(df)
     # same file "too large": hint dropped, no explicit broadcast of the build
     monkeypatch.setattr(SP, "BROADCAST_GUARD_BYTES", 1)
     df2 = SP.knn_join_segments(
-        pts, file_segs, radius_m=100.0, k=1, point_id="doc_id", seg_id="edge_id"
+        pts, file_segs, radius_m=100.0, point_id="doc_id", seg_id="edge_id"
     )
     assert "ResolvedHint" not in df2._jdf.queryExecution().analyzed().toString()
 
@@ -287,20 +287,21 @@ def test_reassign_batch_empty():
     assert _reassign_batch(pdf) == ([], [], [])
 
 
-def test_split_fast_multi_matches_loop():
-    """The vectorized multi-point split refinement must be bit-equal to
-    its per-row reference twin across rings, endpoint-inside rejects,
-    no-hit rejects, at-end rejects, and accepted multi-split geometries."""
+def test_split_fast_matches_loop():
+    """The vectorized split refinement must be bit-equal to its per-row
+    reference twin across rings, endpoint-inside rejects, no-hit rejects,
+    at-end rejects, and accepted splits on 2-point and multi-point
+    geometries."""
     import numpy as np
     import pandas as pd
 
     from _twins import split_rows_loop
-    from osmnetfusion_spark.plans.simplify import _split_fast_multi
+    from osmnetfusion_spark.plans.simplify import _split_fast
 
     rng = np.random.RandomState(7)
     rows = []
     for i in range(300):
-        npts = int(rng.randint(3, 9))
+        npts = int(rng.randint(2, 9))
         bx, by = 11.5 + rng.rand() * 0.1, 48.1 + rng.rand() * 0.1
         geom = [[bx + j * 1e-3 + rng.randn() * 1e-4,
                  by + rng.randn() * 1e-4] for j in range(npts)]
@@ -313,7 +314,10 @@ def test_split_fast_multi_matches_loop():
             # (endpoint-inside rejects), and far away (no-hit rejects)
             mode = rng.randint(3)
             if mode == 0:
-                cx, cy = geom[npts // 2]
+                # middle of the polyline (a vertex, or the midpoint of
+                # the middle segment when the point count is even)
+                a, b = geom[(npts - 1) // 2], geom[npts // 2]
+                cx, cy = (a[0] + b[0]) / 2, (a[1] + b[1]) / 2
             elif mode == 1:
                 cx, cy = geom[0]
             else:
@@ -326,7 +330,9 @@ def test_split_fast_multi_matches_loop():
             ccx=bx + rng.randn() * 1e-3, ccy=by + rng.randn() * 1e-3,
         ))
     pdf = pd.DataFrame(rows)
-    got = _split_fast_multi(pdf)
+    got = _split_fast(pdf)
     want = split_rows_loop(pdf)
     assert got == want          # same dicts, same order, bit-equal floats
     assert 10 < len(got) < 300  # accepts AND rejects both exercised
+    two_pt = set(pdf.eid[pdf.geometry.map(len) == 2])
+    assert 0 < sum(r["eid"] in two_pt for r in got) < len(two_pt)

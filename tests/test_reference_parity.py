@@ -290,12 +290,13 @@ def _step11_counts(edges: pd.DataFrame) -> dict:
     """Greedy per-uv-pair merge -> AnEdge count + per-mode access tallies
     (the reference's step-12 per-mode prints, p3_simplification.py:373-380).
 
-    Access flags reuse the engine's pure-pandas rule functions
-    (functions/folds.py access_*_py -- already sequential code with
-    file:line citations into the reference); the twin's contribution is
-    the independent grouping/greedy/direction orchestration around them.
+    Access flags reuse the pure-pandas rule twins (tests/_twins.py
+    access_*_py -- already sequential code with file:line citations into
+    the reference); the twin's contribution is the independent
+    grouping/greedy/direction orchestration around them.
     """
-    from osmnetfusion_spark.functions import folds, tags
+    from _twins import access_bike_py, access_motorized_py, access_walk_py
+    from osmnetfusion_spark.functions import tags
 
     e = edges[edges.new_u != edges.new_v].copy()
     # merge_edges prep parity: maxspeed -> clean(keep=max); '' -> NaN on
@@ -363,11 +364,11 @@ def _step11_counts(edges: pd.DataFrame) -> dict:
                 if len(subset) == 0:
                     continue  # VU absent when no opposite-direction rows
                 n_edges += 1
-                if folds.access_walk_py(subset):
+                if access_walk_py(subset):
                     n_mode["walk"] += 1
-                if folds.access_bike_py(subset):
+                if access_bike_py(subset):
                     n_mode["bike"] += 1
-                if folds.access_motorized_py(subset):
+                if access_motorized_py(subset):
                     n_mode["motorized"] += 1
     return {
         "step12_edges": n_edges,

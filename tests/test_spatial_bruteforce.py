@@ -90,7 +90,7 @@ def test_knn1_matches_bruteforce(spark, seed):
     got = {
         r.point_id: (r.edge_id, r.dist_m)
         for r in spatial.knn_join_segments(
-            pdf, sdf, radius_m=radius, k=1, point_id="point_id", seg_id="edge_id"
+            pdf, sdf, radius_m=radius, point_id="point_id", seg_id="edge_id"
         ).collect()
     }
     want = {}
@@ -121,7 +121,7 @@ def test_knn_points_matches_bruteforce(spark, seed):
     got = {
         r.sig_id: (r.node_id, r.dist_m)
         for r in spatial.knn_join_points(
-            probe, build, radius_m=radius, k=1, probe_id="sig_id", build_id="node_id"
+            probe, build, radius_m=radius, probe_id="sig_id", build_id="node_id"
         ).collect()
     }
     want = {}
