@@ -1,4 +1,4 @@
-"""Stage snapshots, resume, per-partition lineage, metrics log.
+"""Stage snapshots, resume, per-file lineage, metrics log.
 
 The reference pipeline communicates between stages ONLY through files
 (gpkg/json/csv paths, configFile.py:52, 113-155; README.md:66 notes p3 can
@@ -10,11 +10,15 @@ Storage: one parquet directory per stage under the warehouse. A stage is
 written to ``<stage>.inprogress`` and renamed into place, then recorded in
 ``_MANIFEST.json``, which is itself committed atomically (write a temp
 file, ``os.replace``). A stage counts as done only when its manifest
-entry and its ``_SUCCESS`` marker both exist.
+entry and its ``_SUCCESS`` marker exist and the row total of its part-file
+footers equals the manifest's ``rows``: a missing, truncated or unreadable
+part file makes the stage run again.
 
-Lineage: per output partition we record (partition_id, rows, min/max of
-the stage key) into `<warehouse>/_lineage/<stage>.json`; metrics (rows in/
-out, wall seconds) append to `<warehouse>/_metrics.jsonl`.
+A durable stage runs only its write's Spark jobs. Its schema, row count
+and lineage come from the parquet footers (:func:`_footers`), read on the
+driver: per written part file we record (file, rows, min/max of the stage
+key) into `<warehouse>/_lineage/<stage>.json`; metrics (rows, wall
+seconds) append to `<warehouse>/_metrics.jsonl`.
 """
 
 from __future__ import annotations
@@ -25,8 +29,12 @@ import shutil
 import sys
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+#: footer key under which Spark stores the written schema in every part file
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def code_fingerprint() -> str:
@@ -49,6 +57,41 @@ def code_fingerprint() -> str:
             with open(full, "rb") as f:
                 h.update(f.read())
     return h.hexdigest()[:16]
+
+
+def _key_range(md: pq.FileMetaData, key: str) -> tuple:
+    """(min, max) of leaf column ``key`` over the row-group statistics."""
+    stats = [
+        md.row_group(g).column(j).statistics
+        for j in range(md.num_columns) if md.schema.column(j).path == key
+        for g in range(md.num_row_groups)
+    ]
+    stats = [st for st in stats if st is not None and st.has_min_max]
+    if not stats:
+        return None, None
+    return min(st.min for st in stats), max(st.max for st in stats)
+
+
+def _footers(path: str, key: str | None = None) -> tuple[StructType, list[dict]]:
+    """Spark schema and per-file ``{file, rows, key_min, key_max}`` of the
+    parquet directory ``path``, read from its part-file footers (one
+    ``read_metadata`` per file, no Spark job).
+
+    Raises ``OSError`` when the directory or every part file is missing and
+    ``ValueError`` (``pyarrow.lib.ArrowInvalid``) when a footer is unreadable.
+    """
+    schema, files = None, []
+    for fn in sorted(f for f in os.listdir(path) if f.startswith("part-")):
+        md = pq.read_metadata(os.path.join(path, fn))
+        if schema is None:
+            schema = StructType.fromJson(json.loads(md.metadata[_SPARK_SCHEMA_KEY]))
+        rec = {"file": fn, "rows": md.num_rows}
+        if key is not None:
+            rec["key_min"], rec["key_max"] = _key_range(md, key)
+        files.append(rec)
+    if schema is None:
+        raise FileNotFoundError(f"no parquet part file under {path}")
+    return schema, files
 
 
 class Snapshotter:
@@ -124,18 +167,25 @@ class Snapshotter:
 
     def is_done(self, stage: str) -> bool:
         ent = self.manifest["stages"].get(stage)
-        return bool(ent) and os.path.exists(
-            os.path.join(self.warehouse, stage, "_SUCCESS")
-        )
+        path = os.path.join(self.warehouse, stage)
+        if not ent or not os.path.exists(os.path.join(path, "_SUCCESS")):
+            return False
+        try:
+            _, files = _footers(path)
+        except (OSError, ValueError):
+            return False
+        return sum(f["rows"] for f in files) == ent["rows"]
 
     def load(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.warehouse, stage))
+        path = os.path.join(self.warehouse, stage)
+        return self.spark.read.schema(_footers(path)[0]).parquet(path)
 
     def stage(self, name: str, df_fn, lineage_key: str | None = None) -> DataFrame:
         """Run (or resume) a stage. ``df_fn`` is a zero-arg callable
         returning the stage's DataFrame -- lazily built only when the
         snapshot is missing, so resumed runs skip the upstream plan
-        entirely."""
+        entirely. A fresh stage runs only its write's Spark jobs; the
+        returned DataFrame reads the snapshot with its footer schema."""
         if self.is_done(name):
             self._log_metric(
                 {"run": self.run_id, "stage": name, "resumed": True, "ts": time.time()}
@@ -151,17 +201,8 @@ class Snapshotter:
         if os.path.exists(path):
             shutil.rmtree(path)
         os.replace(tmp, path)
-        out = self.load(name)
 
-        # per-partition lineage
-        lin_cols = [F.spark_partition_id().alias("partition_id")]
-        agg = [F.count(F.lit(1)).alias("rows")]
-        if lineage_key and lineage_key in out.columns:
-            agg += [
-                F.min(lineage_key).alias("key_min"),
-                F.max(lineage_key).alias("key_max"),
-            ]
-        lineage = [r.asDict() for r in out.select(*lin_cols, "*").groupBy("partition_id").agg(*agg).collect()]
+        schema, lineage = _footers(path, lineage_key)
         with open(os.path.join(self.warehouse, "_lineage", f"{name}.json"), "w") as f:
             json.dump(lineage, f, default=str)
 
@@ -177,4 +218,4 @@ class Snapshotter:
             {"run": self.run_id, "stage": name, "rows": n,
              "sec": round(time.time() - t0, 2), "resumed": False, "ts": time.time()}
         )
-        return out
+        return self.spark.read.schema(schema).parquet(path)

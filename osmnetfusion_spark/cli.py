@@ -15,7 +15,6 @@ Subcommands:
   pipeline  -- enrichment + simplification over the synthetic city, with
                per-stage snapshots (resume skips committed stages)
   snap      -- pages -> simplified-edge kNN snap -> tile assignments
-  scaling   -- the N vs 4N throughput evidence (delegates to tools/)
 """
 
 from __future__ import annotations
@@ -49,7 +48,6 @@ def cmd_pipeline(args) -> None:
             reuse_mismatched=args.resume,
         )
         nodes, edges = pipeline.run_full(spark, city, metrics, snap=snap)
-        nodes = snap.stage("final_nodes", lambda: nodes, "g_id")
     else:
         nodes, edges = pipeline.run_full(spark, city, metrics)
     print(json.dumps({"nodes": nodes.count(), "edges": edges.count(), "metrics": metrics}))

@@ -2298,7 +2298,7 @@ def q_amenity_radius(spark, sf_dir):
     snap to it as their single nearest edge (`amenity_on`).
 
     Dedicated radius path (no per-point ranking window over all in-radius
-    candidates); the nearest flag comes from the k=1 cellfold. FLAT_KX
+    candidates); the nearest flag comes from spatial.knn_join_segments. FLAT_KX
     makes the distance bit-identical to the DuckDB oracle."""
     p = doc_points(spark, sf_dir).select("doc_id", "lat", "lon")
     s = supplier_segments(spark, sf_dir)

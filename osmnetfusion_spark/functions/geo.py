@@ -163,16 +163,6 @@ def polyline_length_m(coords: np.ndarray) -> float:
     )
 
 
-def bearing_np(ax, ay, bx, by) -> np.ndarray:
-    return np.degrees(np.arctan2(np.asarray(by) - np.asarray(ay), np.asarray(bx) - np.asarray(ax)))
-
-
-def angle_diff_deg(a, b) -> np.ndarray:
-    """Absolute angular difference folded into [0, 180]."""
-    d = np.abs(np.asarray(a, dtype=np.float64) - np.asarray(b, dtype=np.float64)) % 360.0
-    return np.where(d > 180.0, 360.0 - d, d)
-
-
 def point_segment_dist_np(py_, px, ay, ax, by, bx) -> np.ndarray:
     """Vectorized twin of :func:`point_segment_dist_m` for pandas UDFs."""
     py_, px, ay, ax, by, bx = (np.asarray(a, dtype=np.float64) for a in (py_, px, ay, ax, by, bx))

@@ -148,11 +148,6 @@ def weighted_mean_agg(value: Column, weight: Column) -> Column:
     return num / den
 
 
-def any_yes_agg(col: Column, yes: tuple[str, ...] = ("yes",)) -> Column:
-    """Boolean any-fold over a tag column (A4)."""
-    return F.max(F.when(col.isin(*yes), True).otherwise(False))
-
-
 def parking_union_agg(col: Column) -> Column:
     """A9: distinct parking values minus {no, no_stopping, fire_lane, ''}."""
     return F.array_sort(
@@ -224,21 +219,6 @@ def bike_access_agg(
     cond3 = _any(cycleway.isNotNull() & (cycleway != ""))
     base = cond0 | cond1a | cond2
     return (base & ~cond1b) | cond3
-
-
-def bike_tag_any_col(df_cols: list[str]) -> Column:
-    """Per-row: any BIKE_TAG_COLS value not in {'no',''} (schema-guarded)."""
-    conds = [
-        F.col(f"`{c}`").isNotNull() & ~F.col(f"`{c}`").cast("string").isin("no", "")
-        for c in BIKE_TAG_COLS
-        if c in df_cols
-    ]
-    if not conds:
-        return F.lit(False)
-    out = conds[0]
-    for c in conds[1:]:
-        out = out | c
-    return out
 
 
 def motorized_access_agg(highway: Column, oneway: Column, bike_access_label: Column) -> Column:

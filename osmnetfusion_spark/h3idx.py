@@ -13,9 +13,9 @@ the engine needs:
 
 - ``cell_col(lat, lon, res)``    -- encode, **pure Spark column arithmetic**
   (whole-stage codegen; no UDF; expressible in ANSI SQL for oracles)
-- ``cell_np`` / ``ring_np``      -- vectorized numpy encode / k-ring, used
-  inside pandas UDFs for build-side cover-cell explosion
-- ``cover_segment_np``           -- cells crossed by a line segment
+- ``ring_offsets(k)``           -- cell-id offsets of the ring-k block, the
+  one source of neighbor cells for column- and numpy-side dilation
+- ``cell_np`` / ``ring_np``      -- vectorized numpy encode / k-ring
 - ``parent`` relation            -- ``i >> 1, j >> 1`` (res-1), giving the
   partition-prefix hierarchy used for table layout
 
@@ -122,66 +122,24 @@ def decode_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 def cell_center_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """cell id -> (lat, lon) of the cell center."""
     res, i, j = decode_np(cell)
-    size = 1.0 / (1 << res).astype(np.float64) if isinstance(res, np.ndarray) else None
     size = 1.0 / np.power(2.0, res.astype(np.float64))
     lon = (i.astype(np.float64) + 0.5) * size - 180.0
     lat = (j.astype(np.float64) + 0.5) * size - 90.0
     return lat, lon
 
 
+def ring_offsets(k: int = 1) -> list[int]:
+    """Id offsets of the cells within Chebyshev distance k, self included:
+    ``cell + off`` walks the (2k+1)^2 same-res block row by row."""
+    return [dj * SHIFT_J + di for dj in range(-k, k + 1) for di in range(-k, k + 1)]
+
+
 def ring_np(cell: int, k: int = 1) -> np.ndarray:
     """All cells within Chebyshev distance k (the (2k+1)^2 block incl. self)."""
-    res = int(cell // SHIFT_RES)
-    rem = cell - res * SHIFT_RES
-    j = int(rem // SHIFT_J)
-    i = int(rem - j * SHIFT_J)
-    di, dj = np.meshgrid(np.arange(-k, k + 1), np.arange(-k, k + 1))
-    return (res * SHIFT_RES + (j + dj.ravel()) * SHIFT_J + (i + di.ravel())).astype(
-        np.int64
-    )
+    return np.int64(cell) + np.array(ring_offsets(k), dtype=np.int64)
 
 
 def dilate_cells_np(cells: np.ndarray, k: int = 1) -> np.ndarray:
     """Union of ring-k of every input cell (deduped, sorted)."""
     cells = np.asarray(cells, dtype=np.int64)
-    res = cells // SHIFT_RES
-    rem = cells - res * SHIFT_RES
-    j = rem // SHIFT_J
-    i = rem - j * SHIFT_J
-    offs = np.arange(-k, k + 1)
-    di, dj = np.meshgrid(offs, offs)
-    di, dj = di.ravel(), dj.ravel()
-    ii = (i[:, None] + di[None, :]).ravel()
-    jj = (j[:, None] + dj[None, :]).ravel()
-    rr = np.repeat(res, di.size)
-    return np.unique(rr * SHIFT_RES + jj * SHIFT_J + ii)
-
-
-def cover_segment_np(
-    ax: float, ay: float, bx: float, by: float, res: int
-) -> np.ndarray:
-    """Cells crossed by segment (ax,ay)->(bx,by); x=lon, y=lat.
-
-    Conservative supercover: sample at half-cell steps plus both endpoints,
-    then dedupe. For the ~100 m segments this engine produces after curve
-    splitting, that is 2-4 cells.
-    """
-    size = size_deg(res)
-    steps = max(int(math.hypot(bx - ax, by - ay) / (size * 0.5)) + 1, 1)
-    t = np.linspace(0.0, 1.0, steps + 1)
-    lon = ax + (bx - ax) * t
-    lat = ay + (by - ay) * t
-    return np.unique(cell_np(lat, lon, res))
-
-
-def cover_bbox_np(
-    min_lat: float, min_lon: float, max_lat: float, max_lon: float, res: int
-) -> np.ndarray:
-    """All cells overlapping a bounding box (polygon build-side cover)."""
-    inv = float(1 << res)
-    i0 = int(math.floor((min_lon + 180.0) * inv))
-    i1 = int(math.floor((max_lon + 180.0) * inv))
-    j0 = int(math.floor((min_lat + 90.0) * inv))
-    j1 = int(math.floor((max_lat + 90.0) * inv))
-    ii, jj = np.meshgrid(np.arange(i0, i1 + 1), np.arange(j0, j1 + 1))
-    return (res * SHIFT_RES + jj.ravel() * SHIFT_J + ii.ravel()).astype(np.int64)
+    return np.unique(cells[:, None] + np.array(ring_offsets(k), dtype=np.int64))

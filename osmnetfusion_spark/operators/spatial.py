@@ -35,8 +35,6 @@ from .. import h3idx
 from ..functions import geo
 from .partitioning import fan_out, scan_bytes
 
-_NEIGHBOR_OFFS = [dj * h3idx.SHIFT_J + di for dj in (-1, 0, 1) for di in (-1, 0, 1)]
-
 
 # conservative ceiling for an explicit build-side broadcast: cover-cell
 # explosion multiplies the segment rows ~3-5x, and every executor holds a
@@ -91,11 +89,8 @@ def explode_segments(edges: DataFrame, geom: str = "geometry") -> DataFrame:
 def cover_segment_cells(
     ax: Column, ay: Column, bx: Column, by: Column, res: int, dilate_k: int = 0
 ) -> Column:
-    """Cells crossed by a segment (optionally ring-k dilated), column-only.
-
-    Half-cell-step supercover sampling, identical to
-    :func:`..h3idx.cover_segment_np`.
-    """
+    """Cells crossed by a segment (optionally ring-k dilated), column-only,
+    by half-cell-step supercover sampling."""
     half = h3idx.size_deg(res) * 0.5
     steps = F.greatest(
         F.ceil(F.greatest(F.abs(bx - ax), F.abs(by - ay)) / F.lit(half)).cast("int"),
@@ -113,11 +108,7 @@ def cover_segment_cells(
 
 def dilate_cells(cells: Column, k: int = 1) -> Column:
     """Ring-k dilation of an array<long> of cell ids, column-only."""
-    offs = [
-        dj * h3idx.SHIFT_J + di
-        for dj in range(-k, k + 1)
-        for di in range(-k, k + 1)
-    ]
+    offs = h3idx.ring_offsets(k)
     return F.array_distinct(
         F.flatten(F.transform(cells, lambda c: F.array(*[c + F.lit(o) for o in offs])))
     )

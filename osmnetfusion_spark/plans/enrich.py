@@ -486,9 +486,6 @@ def add_pt_stops(edges: DataFrame, stops: DataFrame) -> DataFrame:
     segs = spatial.explode_segments(subset.select("edge_id", "geometry")).select(
         "edge_id", "seg_idx", "ax", "ay", "bx", "by"
     )
-    stops_k = stops.withColumn(
-        "stop_id", F.monotonically_increasing_id()
-    )  # only for uniqueness within the snap; output order pinned below
     stops_k = stops.select(
         F.concat_ws("/", "member_ref", "name").alias("stop_id"), "member_ref", "name", "lat", "lon"
     ).dropDuplicates(["stop_id"])

@@ -9,6 +9,9 @@ per-step row counts the reference prints (p3_simplification.py:143-253).
 
 from __future__ import annotations
 
+import functools
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +47,19 @@ def _stager(snap, prefix: str):
     return bound
 
 
+def _laps(m: dict, prefix: str):
+    """``lap(name)`` stores the seconds since the previous lap (or since
+    this call) under ``m[prefix + name]``."""
+    last = [time.time()]
+
+    def lap(name: str) -> None:
+        now = time.time()
+        m[f"{prefix}{name}"] = round(now - last[0], 2)
+        last[0] = now
+
+    return lap
+
+
 def run_enrichment(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -59,16 +75,8 @@ def run_enrichment(
     every action. Stage bodies are closures so a resumed run never
     executes the plans of completed stages.
     """
-    import time as _time
-
-    m = metrics if metrics is not None else {}
-    _t = [_time.time()]
+    lap = _laps(metrics if metrics is not None else {}, "t_enrich_")
     bound = _stager(snap, "enrich_")
-
-    def lap(name):
-        now = _time.time()
-        m[f"t_enrich_{name}"] = round(now - _t[0], 2)
-        _t[0] = now
 
     edges0 = tables["edges"].withColumn("edge_id", F.col("osmid"))
     edges0 = edges0.withColumn("length", enrich.polyline_length_col(F.col("geometry")))
@@ -90,16 +98,11 @@ def run_enrichment(
     # bike-edge labeling + cycleway cascade are pure column logic / self-
     # joins on the checkpointed landuse output -- keep them lazy and fold
     # them into the gradient-stage materialization. add_gradient yields
-    # (nodes, edges); memoize so the two stage closures share one build.
-    _g: dict = {}
-
+    # (nodes, edges); cached so the two stage closures share one build.
+    @functools.cache
     def _gradient():
-        if "v" not in _g:
-            e = enrich.improve_bike_edges(edges)
-            e = enrich.add_cycle_paths(e)
-            n, e = enrich.add_gradient(nodes, e, tables["elevations"])
-            _g["v"] = (n, e)
-        return _g["v"]
+        e = enrich.add_cycle_paths(enrich.improve_bike_edges(edges))
+        return enrich.add_gradient(nodes, e, tables["elevations"])
 
     nodes2 = bound(
         "signal_nodes", "osmid",
@@ -120,12 +123,7 @@ def run_enrichment(
         lambda: enrich.add_pt_stops(edges, tables["pt_stops"]),
     )
     lap("pt_stops")
-    _i: dict = {}
-
-    def _idxs():
-        if "v" not in _i:
-            _i["v"] = enrich.update_idxs(nodes2, edges)
-        return _i["v"]
+    _idxs = functools.cache(lambda: enrich.update_idxs(nodes2, edges))
 
     out_nodes = bound("nodes", "osmid", lambda: _idxs()[0])
     out_edges = bound("edges", "osmid", lambda: _idxs()[1])
@@ -148,29 +146,13 @@ def run_simplification(
     never invoked for completed steps, so no upstream jobs run); without
     it each boundary is a lazy ``localCheckpoint``.
     """
-    import time as _time
-
     m = metrics if metrics is not None else {}
-    _t = [_time.time()]
+    lap = _laps(m, "t_")
     bound = _stager(snap, "p3_")
 
-    def lap(name):
-        now = _time.time()
-        m[f"t_{name}"] = round(now - _t[0], 2)
-        _t[0] = now
-
     # step 1: split curves
-    in_nodes = nodes
     edges = bound("s1_edges", "osmid", lambda: simplify.split_curves(edges))
-
-    def _s1_nodes():
-        new_nodes = simplify.curve_split_nodes(edges, [])
-        for c in in_nodes.columns:
-            if c not in new_nodes.columns:
-                new_nodes = new_nodes.withColumn(c, F.lit(None))
-        return in_nodes.unionByName(new_nodes.select(in_nodes.columns))
-
-    nodes = _s1_nodes()
+    nodes = nodes.unionByName(simplify.curve_split_nodes(edges, []), allowMissingColumns=True)
     if metrics is not None:
         m["step1_edges"] = edges.count()
         m["step1_nodes"] = nodes.count()
@@ -193,29 +175,30 @@ def run_simplification(
     lap("step5")
 
     # step 6: split edges crossing foreign cluster buffers.
-    # split_edges_in_buffers yields (edges, split_lists); memoize so the
+    # split_edges_in_buffers yields (edges, split_lists); cached so the
     # two stage closures share one build on a fresh run and NEITHER runs
     # on resume.
     e6, n5 = edges, nodes
-    _s6: dict = {}
 
+    @functools.cache
     def _splits():
-        if "v" not in _s6:
-            e, sl = simplify.split_edges_in_buffers(e6, n5)
-            _s6["v"] = (e, sl.localCheckpoint())
-        return _s6["v"]
+        e, sl = simplify.split_edges_in_buffers(e6, n5)
+        return e, sl.localCheckpoint()
 
     def _s6_nodes():
-        sp_nodes = simplify.buffer_split_nodes(_splits()[1], n5)
-        for c in n5.columns:
-            if c not in sp_nodes.columns:
-                sp_nodes = sp_nodes.withColumn(c, F.lit(None))
-        sp_nodes = sp_nodes.withColumn("merged_by", F.col("merged_by_hint")).withColumn(
-            "buf_r", simplify._map_lookup(F.col("highway_conn"), simplify.HIGHWAY_BUFFERS, simplify.BUFFER_DEFAULT)
+        sp_nodes = (
+            simplify.buffer_split_nodes(_splits()[1], n5)
+            .withColumn("merged_by", F.col("merged_by_hint"))
+            .drop("merged_by_hint")
+            .withColumn(
+                "buf_r",
+                simplify._map_lookup(F.col("highway_conn"), simplify.HIGHWAY_BUFFERS, simplify.BUFFER_DEFAULT),
+            )
+            # split nodes: cx/cy provisional = own coords until pass 2
+            .withColumn("cx", F.col("x"))
+            .withColumn("cy", F.col("y"))
         )
-        # split nodes: cx/cy provisional = own coords until pass 2
-        sp_nodes = sp_nodes.withColumn("cx", F.col("x")).withColumn("cy", F.col("y"))
-        return n5.unionByName(sp_nodes.select(n5.columns))
+        return n5.unionByName(sp_nodes, allowMissingColumns=True)
 
     edges = bound("s6_edges", "osmid", lambda: _splits()[0])
     # pass-2 clustering runs several actions over this union; without the

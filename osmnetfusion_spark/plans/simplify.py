@@ -247,14 +247,15 @@ def _overlap_pairs(nodes: DataFrame) -> DataFrame:
     # exact same (ia, ib) set: cell_a + off == cell_b <=> cell_b - off ==
     # cell_a, and each pair still meets in exactly one (cell_b, off).
     par = max(int(nodes.sparkSession.sparkContext.defaultParallelism), 1)
-    offs = [dj * h3idx.SHIFT_J + di for dj in (-1, 0, 1) for di in (-1, 0, 1)]
     a = nodes.select(
         F.col("osmid").alias("ia"), F.col("x").alias("xa"), F.col("y").alias("ya"),
         F.col("buf_r").alias("ra"),
     ).repartition(par).withColumn(
         "cell",
         F.explode(
-            F.array(*[h3idx.cell_col(F.col("ya"), F.col("xa"), res) + F.lit(o) for o in offs])
+            F.array(*[
+                h3idx.cell_col(F.col("ya"), F.col("xa"), res) + F.lit(o) for o in h3idx.ring_offsets(1)
+            ])
         ),
     )
     b = nodes.select(
@@ -372,39 +373,22 @@ def connected_components(
         )
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=False)
     )
-    n_cross = contracted.count()
-    if n_cross == 0:
-        root_map = None
-    elif n_cross <= driver_limit:
-        rows = contracted.collect()
-        lab = _union_find_min([r.a for r in rows], [r.b for r in rows])
-        root_map = spark.createDataFrame(
-            [(int(k), int(v)) for k, v in lab.items() if k != v] or [(-1, -1)],
-            "l1 long, __root long",
-        )
-    else:
-        root_map = (
-            _cc_iterative(contracted, spark, driver_limit=driver_limit)
-            .withColumnRenamed("osmid", "l1")
-            .withColumnRenamed("component", "__root")
-        )
+    root_map = _cc_iterative(contracted, spark, driver_limit=driver_limit).select(
+        F.col("osmid").alias("l1"), F.col("component").alias("__root")
+    )
 
     members = (
         pairs.select(F.col("ia").alias("osmid"))
         .unionByName(pairs.select(F.col("ib").alias("osmid")))
         .distinct()
     )
-    out = members.join(local, "osmid", "left").withColumn(
-        "l1", F.coalesce("label", F.col("osmid"))
+    out = (
+        members.join(local, "osmid", "left")
+        .withColumn("l1", F.coalesce("label", F.col("osmid")))
+        .join(root_map, "l1", "left")
     )
-    if root_map is not None:
-        out = out.join(F.broadcast(root_map) if n_cross <= driver_limit else root_map, "l1", "left")
-        comp = F.coalesce("__root", F.col("l1"))
-    else:
-        comp = F.col("l1")
-    return out.select("osmid", comp.alias("component"))
+    return out.select("osmid", F.coalesce("__root", F.col("l1")).alias("component"))
 
 
 def _cc_iterative(
@@ -413,28 +397,31 @@ def _cc_iterative(
     max_iters: int = 25,
     driver_limit: int = 2_000_000,
 ) -> DataFrame:
-    """Iterative hash-min label propagation + pointer jumping; the scale
-    fallback for :func:`connected_components` step 3. Each round does
-    (a) label <- min(label, neighbor labels) and (b) one pointer-jump
-    label <- label(label), giving O(log diameter) rounds instead of
-    O(diameter); localCheckpoint per round truncates lineage.
+    """(osmid, component) of an (a, b) pair graph; the contracted-graph
+    solver of :func:`connected_components` step 3.
 
     Pair sets under ``driver_limit`` solve on the driver with the same
-    deterministic min-id union-find the block CC uses for its contracted
-    graph -- identical labels, and a handful of rounds x ~5 Spark jobs
-    each collapse to one collect (the near-dup graphs of q_dedup_pipeline
-    are tiny relative to the corpus; the distributed loop remains the
-    unbounded fallback)."""
+    deterministic min-id union-find the block CC uses inside its blocks --
+    identical labels, and a handful of rounds x ~5 Spark jobs each
+    collapse to one collect (the near-dup graphs of q_dedup_pipeline are
+    tiny relative to the corpus). Larger sets run iterative hash-min label
+    propagation + pointer jumping: each round does (a) label <- min(label,
+    neighbor labels) and (b) one pointer-jump label <- label(label), giving
+    O(log diameter) rounds instead of O(diameter); localCheckpoint per
+    round truncates lineage."""
     pairs = pairs.localCheckpoint(eager=False)
     n_pairs = pairs.count()
     if n_pairs <= driver_limit:
-        rows = pairs.collect()
+        rows = pairs.collect() if n_pairs else []
         lab = _union_find_min([r.a for r in rows], [r.b for r in rows])
         ids = sorted({int(r.a) for r in rows} | {int(r.b) for r in rows})
-        return spark.createDataFrame(
-            [(i, int(lab.get(i, i))) for i in ids] or [(-1, -1)],
-            "osmid long, component long",
-        ).filter(F.col("osmid") != -1)
+        comp = spark.createDataFrame(
+            [(i, int(lab.get(i, i))) for i in ids], "osmid long, component long"
+        )
+        # small by construction, so broadcast to joins; the literal filter
+        # makes an empty result an empty relation, which joins fold away
+        # without running a job
+        return F.broadcast(comp.filter(F.lit(bool(ids))))
     sym = pairs.select(F.col("a").alias("a"), F.col("b").alias("b")).unionByName(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -708,16 +695,9 @@ def split_edges_in_buffers(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     ).withColumn(
         "cell",
         F.explode(
-            F.array(
-                *[
-                    h3idx.cell_col(F.col("__dy"), F.col("__dx"), res) + F.lit(o)
-                    for o in [
-                        dj * h3idx.SHIFT_J + di
-                        for dj in (-1, 0, 1)
-                        for di in (-1, 0, 1)
-                    ]
-                ]
-            )
+            F.array(*[
+                h3idx.cell_col(F.col("__dy"), F.col("__dx"), res) + F.lit(o) for o in h3idx.ring_offsets(1)
+            ])
         ),
     )
     eg = edges.select(F.col("osmid").alias("eid"), "geometry")

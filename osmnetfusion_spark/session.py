@@ -64,10 +64,11 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the bench harness can pin parallelism for the N-vs-4N scaling runs.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, and without that
+    deployment override to ``local[<usable cores>]``, so a default run
+    never starts more Python workers than the host has cores.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = cpus if cpus.isdigit() else str(os.cpu_count() or 8)

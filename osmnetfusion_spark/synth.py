@@ -27,8 +27,6 @@ byte-identical tables.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -431,7 +429,3 @@ def text_sha256(df: DataFrame, url: str = "url", text: str = "text") -> DataFram
         F.col(url).alias("url"),
         F.sha2(F.encode(F.col(text), "UTF-8"), 256).alias("text_sha256"),
     )
-
-
-def sha256_bytes(b: bytes) -> str:
-    return hashlib.sha256(b).hexdigest()

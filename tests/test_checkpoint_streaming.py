@@ -69,6 +69,98 @@ def test_snapshot_config_mismatch_invalidates(spark, tmp_path):
     assert len(calls) == 2
 
 
+def _part_files(path):
+    return sorted(f for f in os.listdir(path) if f.startswith("part-"))
+
+
+def _first_part(wh, stage):
+    return os.path.join(wh, stage, _part_files(os.path.join(wh, stage))[0])
+
+
+def _truncate_part(wh, stage):
+    part = _first_part(wh, stage)
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+
+
+def _delete_part(wh, stage):
+    os.remove(_first_part(wh, stage))
+
+
+def _edit_manifest_rows(wh, stage):
+    path = os.path.join(wh, "_MANIFEST.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["stages"][stage]["rows"] += 1
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+
+
+@pytest.mark.parametrize("damage", [_truncate_part, _delete_part, _edit_manifest_rows])
+def test_damaged_snapshot_is_rebuilt(spark, tmp_path, damage):
+    """A committed stage whose part files no longer add up to the manifest
+    (truncated or missing part file, edited row count) is not done: the
+    next run rebuilds it instead of serving it."""
+    wh = str(tmp_path / "wh")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(0, 100, 1, 2)
+
+    Snapshotter(spark, wh).stage("s1", build, lineage_key="id")
+    damage(wh, "s1")
+    snap = Snapshotter(spark, wh)
+    assert not snap.is_done("s1")
+    df = snap.stage("s1", build, lineage_key="id")
+    assert len(calls) == 2
+    assert sorted(r.id for r in df.collect()) == list(range(100))
+    assert snap.is_done("s1")
+
+
+def _jobs_in_group(spark, group):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_load_runs_no_job(spark, tmp_path):
+    """Loading a committed stage reads its schema from the part-file
+    footers: no schema-inference job runs until the frame is consumed."""
+    wh = str(tmp_path / "wh")
+    snap = Snapshotter(spark, wh)
+    snap.stage("s1", lambda: spark.range(0, 50, 1, 3).withColumn("k", F.col("id") % 7), "id")
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-load", "load a committed stage")
+    try:
+        df = snap.load("s1")
+        assert _jobs_in_group(spark, "snapshot-load") == []
+        assert df.columns == ["id", "k"] and df.count() == 50
+        assert _jobs_in_group(spark, "snapshot-load")  # the probe sees jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_lineage_per_written_file(spark, tmp_path):
+    """Lineage has one record per written part file: the rows sum to the
+    stage's count and each file's key_min/key_max are its key range."""
+    wh = str(tmp_path / "wh")
+    df = Snapshotter(spark, wh).stage(
+        "s1", lambda: spark.range(0, 1000, 1, 4).withColumn("k", (F.col("id") * 7919) % 1009), "k"
+    )
+    with open(os.path.join(wh, "_lineage", "s1.json")) as f:
+        lineage = json.load(f)
+    assert [r["file"] for r in lineage] == _part_files(os.path.join(wh, "s1"))
+    assert sum(r["rows"] for r in lineage) == df.count()
+    for r in lineage:
+        part = spark.read.parquet(os.path.join(wh, "s1", r["file"]))
+        got = part.agg(F.count("*"), F.min("k"), F.max("k")).first()
+        assert (r["rows"], r["key_min"], r["key_max"]) == tuple(got)
+    assert min(r["key_min"] for r in lineage) == df.agg(F.min("k")).first()[0]
+    assert max(r["key_max"] for r in lineage) == df.agg(F.max("k")).first()[0]
+
+
 def test_windowed_counts_stream_matches_batch(spark, tmp_path):
     src = str(tmp_path / "events_src")
     ck = str(tmp_path / "ck1")
