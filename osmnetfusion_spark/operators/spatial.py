@@ -19,17 +19,26 @@ spatial join is the same two-phase plan:
 
 Ring-1 dilation is complete because :func:`..h3idx.pick_res` chooses the
 finest resolution whose cell short side still exceeds the join radius.
+
+The one exception is the escalating-radius segment snap
+(:func:`knn_join_segments_adaptive`): its build side is small enough to
+collect, so the same cells and distance terms go into a broadcast numpy
+index and each probe batch is joined and refined in one ``mapInArrow``
+kernel, with no shuffle.
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from typing import Callable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import h3idx
 from ..functions import geo
@@ -135,6 +144,36 @@ def cover_bbox_cells(
 # ------------------------------------------------------------------ kNN join
 
 
+def _ring1_cover(res: int) -> Column:
+    """Ring-1-dilated cover cells of the ``ax, ay, bx, by`` segment at ``res``."""
+    return cover_segment_cells(
+        F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), res, dilate_k=1
+    )
+
+
+def _segment_terms(segs: DataFrame, flat_kx: float | None = None) -> DataFrame:
+    """Add the segment-only terms of :func:`..functions.geo.point_segment_dist_m`
+    (``__kx, __abx, __aby, __v``) to ``segs``.
+
+    They are pure functions of the segment, so both kNN plans compute them
+    ONCE on the (tiny) build side: the per-pair expression -- which
+    Catalyst duplicates into the join condition -- stays small, and
+    :func:`knn_join_segments` and the snap kernel read the same bits.
+    """
+    m = F.lit(geo.M_PER_DEG)
+    return (
+        segs.withColumn(
+            "__kx",
+            F.lit(float(flat_kx))
+            if flat_kx is not None
+            else F.cos(F.radians((F.col("ay") + F.col("by")) * 0.5)) * m,
+        )
+        .withColumn("__abx", (F.col("bx") - F.col("ax")) * F.col("__kx"))
+        .withColumn("__aby", (F.col("by") - F.col("ay")) * m)
+        .withColumn("__v", F.col("__abx") * F.col("__abx") + F.col("__aby") * F.col("__aby"))
+    )
+
+
 def knn_join_segments(
     points: DataFrame,
     segments: DataFrame,
@@ -163,9 +202,11 @@ def knn_join_segments(
     under the broadcast threshold, so the candidate join is SHUFFLE-FREE
     and the per-candidate distance runs inside whole-stage codegen), then
     ONE ``groupBy(point).agg(min(struct(dist, seg_id)))`` -- lexicographic
-    struct-min IS the kNN(1) rule, and partial aggregation collapses each
-    map partition to ~one row per point before the only shuffle. The probe
-    side is never exploded.
+    struct-min IS the kNN(1) rule. Spark has no hash-aggregate buffer for
+    ``min(struct)``, so this is a partial + final ``SortAggregate``: each
+    map partition's candidates are sorted on the point and collapsed to
+    one row per point before the only shuffle. The probe side is never
+    exploded.
 
     ``broadcast_build``: hint when the SEGMENTS side is known small (the
     simplified network vs a page corpus). Pass False when the segments
@@ -175,30 +216,9 @@ def knn_join_segments(
     """
     res = h3idx.pick_res(radius_m)
     m = F.lit(geo.M_PER_DEG)
-    build = (
-        segments.select(F.col(seg_id).alias("__e"), "ax", "ay", "bx", "by")
-        .withColumn(
-            "cell",
-            F.explode(
-                cover_segment_cells(
-                    F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), res, dilate_k=1
-                )
-            ),
-        )
-        # projection constants are pure functions of the segment: compute
-        # them ONCE on the (tiny) build side so the per-pair expression --
-        # which Catalyst duplicates into the join condition -- stays small.
-        # Same arithmetic as geo.point_segment_dist_m, bit-identical.
-        .withColumn(
-            "__kx",
-            F.lit(float(flat_kx))
-            if flat_kx is not None
-            else F.cos(F.radians((F.col("ay") + F.col("by")) * 0.5)) * m,
-        )
-        .withColumn("__abx", (F.col("bx") - F.col("ax")) * F.col("__kx"))
-        .withColumn("__aby", (F.col("by") - F.col("ay")) * m)
-        .withColumn("__v", F.col("__abx") * F.col("__abx") + F.col("__aby") * F.col("__aby"))
-    )
+    build = _segment_terms(
+        segments.select(F.col(seg_id).alias("__e"), "ax", "ay", "bx", "by"), flat_kx
+    ).withColumn("cell", F.explode(_ring1_cover(res)))
     probe = fan_out(
         points.select(point_id, lat, lon, *[c for c in carry if c not in (point_id, lat, lon)]),
         point_id,
@@ -263,12 +283,7 @@ def radius_join_segments(
     shuffles are on the same keys and combiner-friendly).
     """
     res = h3idx.pick_res(radius_m)
-    build = segments.withColumn(
-        "cell",
-        F.explode(
-            cover_segment_cells(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), res, dilate_k=1)
-        ),
-    )
+    build = segments.withColumn("cell", F.explode(_ring1_cover(res)))
     probe = fan_out(points, point_id).withColumn(
         "cell", h3idx.cell_col(F.col(lat), F.col(lon), res)
     )
@@ -285,23 +300,115 @@ def radius_join_segments(
     return cand.groupBy(point_id, seg_id).agg(F.min("seg_dist_m").alias("dist_m"))
 
 
-def _cascade(
-    knn1: Callable[[DataFrame, float], DataFrame],
-    points: DataFrame,
-    radii: tuple[float, ...],
-    point_id: str,
-) -> DataFrame:
-    """Escalating-radius kNN(1): ``knn1(remaining, r)`` at each radius in
-    turn, materialized once per rung; only points still unmatched (a
-    left-anti join on ``point_id``) go on to the next radius. Returns the
-    union of all rungs."""
-    remaining = points
-    outs = []
-    for r in radii:
-        matched = knn1(remaining, r).localCheckpoint()
-        outs.append(matched)
-        remaining = remaining.join(matched.select(point_id), point_id, "left_anti")
-    return reduce(DataFrame.unionByName, outs)
+#: Most (point, segment) candidate pairs the snap kernel expands at once.
+#: A 20,000-row batch escalated whole to 200 m (up to ~500 candidates a
+#: point) would otherwise expand ~10M pairs at ~150 bytes each; chunking
+#: bounds the kernel's working set whatever the batch size or radius.
+PAIR_CHUNK = 1 << 20
+
+
+def _segment_index(segments: DataFrame, radii: tuple[float, ...], seg_id: str) -> dict:
+    """Driver-side cell index of ``segments`` for the snap kernel, in ONE
+    Spark job (``toArrow``).
+
+    Segments are sorted by ``seg_id``, so a segment's row number orders
+    ties exactly as the ``(dist_m, seg_id)`` rule does. Per segment it keeps
+    ``ax, ay`` and the :func:`_segment_terms`; per rung, the ring-1 cover
+    cells of every segment as sorted ``cells`` with their segment ``rows``.
+    Both come from the column expressions :func:`knn_join_segments` uses,
+    so the kernel's ``dist_m`` is bit-identical to it. Raises
+    ``ValueError`` when the index exceeds :data:`BROADCAST_GUARD_BYTES`.
+    """
+    res = [h3idx.pick_res(r) for r in radii]
+    tbl = (
+        _segment_terms(segments.select(F.col(seg_id).alias("__e"), "ax", "ay", "bx", "by"))
+        .select(
+            "__e", "ax", "ay", "__kx", "__abx", "__aby", "__v",
+            *[_ring1_cover(rs).alias(f"__c{i}") for i, rs in enumerate(res)],
+        )
+        .toArrow()
+    )
+    tbl = tbl.take(pc.sort_indices(tbl, [("__e", "ascending")], null_placement="at_start"))
+    ix = {
+        k.strip("_"): tbl.column(k).to_numpy()
+        for k in ("ax", "ay", "__kx", "__abx", "__aby", "__v")
+    }
+    ix["ids"] = tbl.column("__e").combine_chunks()
+    ix["rungs"] = []
+    for i, (r, rs) in enumerate(zip(radii, res)):
+        cover = tbl.column(f"__c{i}").combine_chunks()
+        cells = pc.list_flatten(cover).to_numpy()
+        rows = pc.list_parent_indices(cover).to_numpy().astype(np.int32)
+        order = np.argsort(cells, kind="stable")
+        ix["rungs"].append((float(r), rs, cells[order], rows[order]))
+    size = sum(a.nbytes for k, a in ix.items() if k != "rungs")
+    size += sum(a.nbytes for rung in ix["rungs"] for a in rung[2:])
+    if size > BROADCAST_GUARD_BYTES:
+        raise ValueError(
+            f"segment index is {size} bytes, over BROADCAST_GUARD_BYTES "
+            f"({BROADCAST_GUARD_BYTES}); snap against a smaller network"
+        )
+    return ix
+
+
+def _segment_dist_np(plat: np.ndarray, plon: np.ndarray, ix: dict, sg: np.ndarray) -> np.ndarray:
+    """Point-to-segment distance (m) of each ``(plat, plon)`` to index row
+    ``sg``: the same IEEE operations, in the same order, as
+    :func:`knn_join_segments`' column expression."""
+    kx = ix["kx"][sg]
+    v = ix["v"][sg]
+    apx = (plon - ix["ax"][sg]) * kx
+    apy = (plat - ix["ay"][sg]) * geo.M_PER_DEG
+    u = apx * ix["abx"][sg] + apy * ix["aby"][sg]
+    w = apx * apx + apy * apy
+    with np.errstate(divide="ignore", invalid="ignore"):
+        d2 = np.where(u <= 0, w, np.where(u >= v, w - 2 * u + v, w - (u * u) / v))
+    return np.sqrt(np.maximum(d2, 0.0))
+
+
+def _snap_points(
+    lat: np.ndarray, lon: np.ndarray, ix: dict, chunk: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """kNN(1) segment of each point over the index's rungs, escalating
+    only the points a rung left unmatched. Returns ``(point rows, segment
+    rows, dist_m)`` of the matched points, in point order; points with a
+    NULL/non-finite coordinate or no segment within the last radius are
+    absent."""
+    todo = np.flatnonzero(np.isfinite(lat) & np.isfinite(lon))
+    out: list[tuple[np.ndarray, ...]] = []
+    for r, res, cells, cseg in ix["rungs"]:
+        if not len(todo):
+            break
+        c = h3idx.cell_np(lat[todo], lon[todo], res)
+        lo = np.searchsorted(cells, c, "left")
+        cnt = np.searchsorted(cells, c, "right") - lo
+        ends = np.cumsum(cnt)
+        hit = np.zeros(len(todo), dtype=bool)
+        s = 0
+        while s < len(todo):
+            # points s..e-1 expand to at most `chunk` pairs (one point alone
+            # may exceed it)
+            base = ends[s] - cnt[s]
+            e = max(int(np.searchsorted(ends, base + chunk, "right")), s + 1)
+            k = cnt[s:e]
+            p = np.repeat(np.arange(s, e), k)
+            sg = cseg[np.repeat(lo[s:e] - (ends[s:e] - k), k) + np.arange(base, ends[e - 1])]
+            d = _segment_dist_np(lat[todo[p]], lon[todo[p]], ix, sg)
+            ok = d <= r
+            p, sg, d = p[ok], sg[ok], d[ok]
+            o = np.lexsort((sg, d, p))
+            p, sg, d = p[o], sg[o], d[o]
+            first = np.ones(len(p), dtype=bool)
+            first[1:] = p[1:] != p[:-1]
+            out.append((todo[p[first]], sg[first], d[first]))
+            hit[p[first]] = True
+            s = e
+        todo = todo[~hit]
+    if not out:
+        return np.zeros(0, np.int64), np.zeros(0, np.int32), np.zeros(0)
+    rows, sg, d = (np.concatenate(x) for x in zip(*out))
+    o = np.argsort(rows, kind="stable")
+    return rows[o], sg[o], d[o]
 
 
 def knn_join_segments_adaptive(
@@ -314,23 +421,64 @@ def knn_join_segments_adaptive(
     lon: str = "lon",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Multi-resolution kNN snap: escalate unmatched points to wider radii.
+    """Escalating-radius kNN(1) snap of points to polyline segments, as
+    one ``mapInArrow`` kernel over a broadcast cell index.
 
-    A single-pass kNN at a large radius forces coarse cells, and in dense
-    areas the per-cell candidate product explodes (the urban-core skew the
-    north star calls out). Instead: snap at the finest radius (fine cells,
-    tiny candidate sets); only points with no match escalate to the next
-    radius -- typically a few percent. The result is identical to a
-    single-pass kNN at the largest radius because any match within radius
-    r_i is by definition the global nearest within r_j > r_i as well.
+    Same output as :func:`knn_join_segments` at ``radii[-1]``:
+    ``(point_id, seg_id, dist_m, knn_rank, *carry)``, one row per point
+    with a segment within the last radius, ties broken on
+    ``(dist_m, seg_id)``, ``dist_m`` bit-identical. Each input row is
+    snapped on its own, so ``point_id`` should be unique (pages are, after
+    ``dedupe_latest``).
+
+    - :func:`_segment_index` builds the per-rung index in one Spark job
+      and ships it with ``sparkContext.broadcast``. A ``ValueError`` names
+      its size when it exceeds :data:`BROADCAST_GUARD_BYTES`; there is no
+      SQL fallback.
+    - Each Arrow batch of points is snapped in numpy (:func:`_snap_points`):
+      the finest radius first (fine cells, few candidates per point), and
+      only the points it leaves unmatched escalate; a match within r_i is
+      the nearest within any r_j > r_i too. Candidate pairs are expanded
+      at most :data:`PAIR_CHUNK` at a time.
+
+    The plan has no shuffle, aggregate, anti-join or checkpoint, so a lazy
+    ``points`` input is evaluated once per consumption of the result.
+    Reference twin (the per-rung SQL cascade): ``tests/_twins.py::knn_cascade_sql``.
     """
-    return _cascade(
-        lambda remaining, r: knn_join_segments(
-            remaining, segments, radius_m=r,
-            point_id=point_id, seg_id=seg_id, lat=lat, lon=lon, carry=carry,
-        ),
-        points, radii, point_id,
-    )
+    radii = tuple(float(r) for r in radii)
+    bc = points.sparkSession.sparkContext.broadcast(_segment_index(segments, radii, seg_id))
+    chunk = PAIR_CHUNK  # bound into the closure: workers do not see driver globals
+    carry_out = [c for c in carry if c != point_id]
+    schema = T.StructType([
+        T.StructField(point_id, points.schema[point_id].dataType),
+        T.StructField(seg_id, segments.schema[seg_id].dataType),
+        T.StructField("dist_m", T.DoubleType()),
+        T.StructField("knn_rank", T.IntegerType()),
+        *[T.StructField(c, points.schema[c].dataType) for c in carry_out],
+    ])
+
+    def snap(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ix = bc.value
+        for b in batches:
+            plat, plon = (
+                np.asarray(b.column(c).to_numpy(zero_copy_only=False), dtype=np.float64)
+                for c in (lat, lon)
+            )
+            rows, sg, d = _snap_points(plat, plon, ix, chunk)
+            rows = pa.array(rows)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(point_id).take(rows),
+                    ix["ids"].take(pa.array(sg)),
+                    pa.array(d, pa.float64()),
+                    pa.array(np.ones(len(d), np.int32)),
+                    *[b.column(c).take(rows) for c in carry_out],
+                ],
+                names=schema.names,
+            )
+
+    cols = list(dict.fromkeys([point_id, lat, lon, *carry_out]))
+    return fan_out(points.select(*cols)).mapInArrow(snap, schema)
 
 
 def knn_join_points_adaptive(
@@ -344,27 +492,29 @@ def knn_join_points_adaptive(
     build_lat: str = "lat",
     build_lon: str = "lon",
 ) -> DataFrame:
-    """Escalating-radius kNN(1) point snap (the point twin of
-    :func:`knn_join_segments_adaptive`).
+    """Escalating-radius kNN(1) point snap.
 
     A single pass at a large radius forces coarse cells; when the whole
     region spans only a handful of them the cell join degenerates to a
     cross product (measured: the 50k x 10k signal snap produced 4.1e8
     candidate pairs in 9 cells). Snapping at the finest radius first
     keeps the per-cell candidate product tiny, and only unmatched points
-    escalate. Identical to the single-pass result: a match within radius
-    r_i is by definition the global nearest within any r_j > r_i, and
-    the (dist, id) tie-break is the same at every level.
+    escalate: each rung is materialized once and a left-anti join on
+    ``probe_id`` passes the rest on. Identical to the single-pass result:
+    a match within radius r_i is by definition the global nearest within
+    any r_j > r_i, and the (dist, id) tie-break is the same at every level.
     """
-    return _cascade(
-        lambda remaining, r: knn_join_points(
+    remaining, outs = probe, []
+    for r in radii:
+        matched = knn_join_points(
             remaining, build, radius_m=r,
             probe_id=probe_id, build_id=build_id,
             probe_lat=probe_lat, probe_lon=probe_lon,
             build_lat=build_lat, build_lon=build_lon,
-        ),
-        probe, radii, probe_id,
-    )
+        ).localCheckpoint()
+        outs.append(matched)
+        remaining = remaining.join(matched.select(probe_id), probe_id, "left_anti")
+    return reduce(DataFrame.unionByName, outs)
 
 
 def knn_join_points(

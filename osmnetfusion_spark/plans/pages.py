@@ -10,17 +10,19 @@ column untouched (never re-encoded) and verified by the sha256 manifest in
 
 from __future__ import annotations
 
-import re
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import spatial, temporal
 
-_TAG_RE = re.compile(rb"<[^>]+>")
-_WS_RE = re.compile(rb"\s+")
+_TAG_RE = r"<[^>]+>"
+# Python's bytes ``\s``; RE2's ``\s`` omits ``\v``
+_WS_RE = r"[ \t\n\r\f\v]+"
 
 
 TRACKING_PARAMS = ("utm_", "fbclid=", "gclid=", "ref=")
@@ -79,14 +81,15 @@ def dedupe_latest(pages: DataFrame) -> DataFrame:
     snapshots); this is the standard latest-snapshot-per-key pattern.
 
     Implemented as ``min(struct(-ts, text, <payload...>))`` rather than a
-    ``row_number`` window: lexicographic struct-min IS the selection rule,
-    and a hash aggregation (a) map-side-combines duplicate urls BEFORE the
-    exchange -- at web scale recrawled urls collapse on the mappers instead
-    of shipping every snapshot's html bytes through the shuffle -- and (b)
-    needs no per-partition sort of the full payload afterwards. Trailing
-    payload fields in the comparator only fire on full (ts, text) ties,
-    where the window version's pick was partition-order-dependent; this is
-    strictly more deterministic.
+    ``row_number`` window: lexicographic struct-min IS the selection rule.
+    Spark has no hash-aggregate buffer for ``min(struct)``, so the plan is
+    a partial + final ``SortAggregate``: each map partition is sorted on
+    url and collapsed to one row per url before the exchange (recrawled
+    urls do not ship every snapshot's html through the shuffle), and the
+    reduce side sorts the partials once more. Trailing payload fields in
+    the comparator only fire on full (ts, text) ties, where the window
+    version's pick was partition-order-dependent; this is strictly more
+    deterministic.
 
     NULL handling matches ``row_number over warc_ts DESC NULLS LAST``: a
     NULL warc_ts sorts as the oldest possible crawl (loses to any real
@@ -113,47 +116,67 @@ def dedupe_latest(pages: DataFrame) -> DataFrame:
     ).select(cols)
 
 
+def _strip_html(html: pa.Array) -> pa.Array:
+    """Text of each html value: tags become a space, whitespace runs
+    collapse to one space, the ends are trimmed, and the bytes decode as
+    UTF-8 (invalid sequences become U+FFFD). NULL stays NULL.
+
+    Arrow RE2 kernels on the binary column; RE2 reads binary as Latin-1,
+    i.e. byte for byte, as Python's bytes ``re`` does. Reference twin:
+    ``tests/_twins.py::strip_html_loop``.
+    """
+    b = pc.replace_substring_regex(html, _TAG_RE, " ")
+    b = pc.replace_substring_regex(b, _WS_RE, " ")
+    b = pc.replace_substring_regex(b, "^ | $", "")
+    try:
+        return b.cast(pa.string())
+    except pa.ArrowInvalid:  # invalid UTF-8 somewhere in this batch
+        return pa.array(
+            [None if x is None else x.decode("utf-8", errors="replace") for x in b.to_pylist()],
+            pa.string(),
+        )
+
+
 def extract_text(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """Extract text from the html bytes into ``extracted_text``.
 
-    Arrow-batched ``mapInPandas`` over the binary column: strip tags,
-    collapse whitespace, decode UTF-8. Deterministic and pure, so repeated
-    extraction of the same bytes is byte-identical -- the invariant tests
-    compare ``sha256(extracted_text)`` against ``sha256(text)`` per url.
+    ``mapInArrow`` over the pages: :func:`_strip_html` runs on the binary
+    column and every other column passes through as Arrow. Deterministic
+    and pure, so repeated extraction of the same bytes is byte-identical --
+    the invariant tests compare ``sha256(extracted_text)`` against
+    ``sha256(text)`` per url. A NULL ``html`` gives a NULL
+    ``extracted_text``; the row is kept.
     """
-    cols = pages.columns
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in pages.schema.fields)
-    schema = f"{fields}, extracted_text string"
+    schema = T.StructType(
+        pages.schema.fields + [T.StructField("extracted_text", T.StringType())]
+    )
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            raw = pdf[html_col]
-            out = []
-            for b in raw:
-                stripped = _TAG_RE.sub(b" ", bytes(b))
-                stripped = _WS_RE.sub(b" ", stripped).strip()
-                out.append(stripped.decode("utf-8", errors="replace"))
-            pdf = pdf.assign(extracted_text=out)
-            yield pdf[cols + ["extracted_text"]]
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield b.append_column("extracted_text", _strip_html(b.column(html_col)))
 
-    return pages.mapInPandas(run, schema=schema)
+    return pages.mapInArrow(run, schema)
 
 
 def snap_pages_to_edges(
     pages: DataFrame, edge_segments: DataFrame, radius_m: float = 200.0
 ) -> DataFrame:
-    """Cell-local kNN(1) snap of pages to simplified-edge segments (J15).
+    """kNN(1) snap of pages to simplified-edge segments within ``radius_m`` (J15).
 
     ``edge_segments`` comes from :func:`..operators.spatial.explode_segments`
-    over the simplified edges. Returns ``(url, edge_id, dist_m, lat, lon)``;
-    ties broken by ``(dist_m, edge_id)`` for run-to-run determinism. The
-    page coordinates ride the kNN fold (``carry``) so downstream tiling
-    never re-joins the page corpus on url -- at 10^12 pages that re-join
-    was a second full-table shuffle for two doubles.
+    over the simplified edges. Returns ``(url, edge_id, dist_m, lat, lon)``,
+    one row per page with an edge within ``radius_m`` (a page with NULL
+    coordinates or none in range is absent); ties break on
+    ``(dist_m, edge_id)``. The page coordinates ride along, so downstream
+    tiling never re-joins the page corpus on url.
 
-    Uses the multi-resolution cascade (fine cells first, escalate the
-    unmatched tail) -- exact for kNN(1), and immune to the dense-cell
-    candidate blow-up at the wide radius.
+    Runs :func:`..operators.spatial.knn_join_segments_adaptive` over the
+    25 m / 60 m / ``radius_m`` rungs: one Spark job collects the segment
+    cell index and broadcasts it, then one ``mapInArrow`` pass snaps each
+    Arrow batch of pages in numpy, escalating only the pages a finer rung
+    left unmatched. No shuffle and no checkpoint, so a lazy ``pages``
+    input (dedupe -> as-of -> extract) runs once per consumption. ``url``
+    is expected unique, as :func:`dedupe_latest` leaves it.
     """
     ladder = [25.0, 60.0, radius_m]
     radii = tuple(r for r in ladder if r < radius_m) + (radius_m,)

@@ -14,13 +14,22 @@ output between the two.
   :func:`access_motorized_py`, :func:`walk_rows` / :func:`bike_rows` /
   :func:`motorized_rows` and :func:`parking_py`: pandas twins of the
   ``folds.*_cv`` mode helpers, used by :func:`an_edge_pandas` and the
-  reference-parity tally (tests/test_reference_parity.py).
+  reference-parity tally (tests/test_reference_parity.py);
+- :func:`strip_html_loop`: the per-row ``re`` twin of
+  ``pages._strip_html`` (tests/test_pages.py);
+- :func:`knn_cascade_sql`: the per-rung SQL cascade, twin of the
+  ``spatial.knn_join_segments_adaptive`` kernel
+  (tests/test_snap_kernel.py).
 """
 
 from __future__ import annotations
 
+import re
+from functools import reduce
+
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 
 from osmnetfusion_spark.functions import folds, geo
 from osmnetfusion_spark.functions.folds import (
@@ -32,7 +41,43 @@ from osmnetfusion_spark.functions.folds import (
     WALK_HW_STRICT,
     _uniq,
 )
+from osmnetfusion_spark.operators import spatial
 from osmnetfusion_spark.plans.merge import EDGE_OUT_SCHEMA, py_list_str
+
+_TAG_RE = re.compile(rb"<[^>]+>")
+_WS_RE = re.compile(rb"\s+")
+
+
+def strip_html_loop(html: bytes | None) -> str | None:
+    """Per-row twin of ``pages._strip_html``: the original ``re`` loop
+    (tags to a space, collapse ``\\s+``, strip, decode with
+    ``errors="replace"``), with NULL passed through."""
+    if html is None:
+        return None
+    text = _WS_RE.sub(b" ", _TAG_RE.sub(b" ", bytes(html))).strip()
+    return text.decode("utf-8", errors="replace")
+
+
+def knn_cascade_sql(
+    points: DataFrame,
+    segments: DataFrame,
+    radii: tuple[float, ...],
+    point_id: str = "point_id",
+    seg_id: str = "edge_id",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """SQL twin of ``spatial.knn_join_segments_adaptive``: the original
+    cascade. Each rung is a ``knn_join_segments`` struct-min, materialized
+    with ``localCheckpoint``; the points it matched are anti-joined away
+    before the next radius, and the rungs are unioned."""
+    remaining, outs = points, []
+    for r in radii:
+        matched = spatial.knn_join_segments(
+            remaining, segments, radius_m=r, point_id=point_id, seg_id=seg_id, carry=carry
+        ).localCheckpoint()
+        outs.append(matched)
+        remaining = remaining.join(matched.select(point_id), point_id, "left_anti")
+    return reduce(DataFrame.unionByName, outs)
 
 
 def an_edge_pandas(df: pd.DataFrame, main: pd.Series, uv: bool, rev_flag: bool) -> dict | None:

@@ -146,3 +146,69 @@ def test_attach_license_asof_pinned_counts(spark):
     out2 = PG.attach_license_asof(pg.repartition(7), sn.repartition(3))
     b = sorted(map(str, out2.select("url", "lic_license").collect()))
     assert a == b
+
+
+def test_extract_text_keeps_null_html_row(spark):
+    # a NULL html used to fail the whole job (TypeError in bytes(None));
+    # the row is kept, with a NULL extracted_text
+    df = spark.createDataFrame(
+        [("u1", bytearray(b"<p>a  b</p>")), ("u2", None), ("u3", bytearray(b"\xff<i>x</i>"))],
+        "url string, html binary",
+    )
+    got = {r.url: r.extracted_text for r in P.extract_text(df).collect()}
+    assert got == {"u1": "a b", "u2": None, "u3": "� x"}
+
+
+def test_strip_html_matches_re_loop_on_fuzzed_bytes():
+    import numpy as np
+    import pyarrow as pa
+
+    from _twins import strip_html_loop
+
+    # the bytes where RE2 and Python's bytes `re` could part ways: every
+    # ASCII space (incl. \v, \x0c), non-spaces that str `\s` would match
+    # (\x1c, \x85, \xa0, U+2003), invalid UTF-8, and runs of < and >
+    atoms = [
+        b" ", b"\t", b"\n", b"\r", b"\x0b", b"\x0c", b"\x1c", b"\x85", b"\xa0",
+        " ".encode(), "é".encode(), b"\xff", b"\xc3", b"\x80", b"<", b">",
+        b"<<", b">>", b"<p>", b"</a>", b"<a\nhref='x'>", b"a", b"bc", b"0",
+    ]
+    rng = np.random.default_rng(8)
+    docs = [b"", b" ", b" \t\n\r\x0b\x0c ", b"<>", b"<", b">", b"< >", None]
+    for _ in range(3000):
+        docs.append(b"".join(atoms[i] for i in rng.integers(0, len(atoms), rng.integers(0, 25))))
+    want = [strip_html_loop(d) for d in docs]
+    assert P._strip_html(pa.array(docs, pa.binary())).to_pylist() == want
+    # a batch of valid UTF-8 only takes the Arrow cast, not the fallback
+    valid = [d for d, w in zip(docs, want) if w is None or "�" not in w]
+    out = P._strip_html(pa.array(valid, pa.binary()))
+    assert out.type == pa.string()
+    assert out.to_pylist() == [strip_html_loop(d) for d in valid]
+
+
+def test_lazy_pages_upstream_runs_once_per_snap(spark):
+    """Snapping a lazy dedupe -> as-of -> extract input scans the raw pages
+    once: the snap has no per-rung anti-join that re-runs its input."""
+    from osmnetfusion_spark.operators import spatial
+
+    parts = 7  # the raw scan's task count, unlike any other stage here
+    raw = synth.pages(spark, 3000, partitions=parts)
+    lazy = P.extract_text(P.attach_license_asof(P.dedupe_latest(raw), synth.license_snapshots(spark)))
+    edges = spark.createDataFrame(synth.synthetic_city(1)["edges"]).withColumnRenamed(
+        "osmid", "edge_id"
+    )
+    segs = spatial.explode_segments(edges).select("edge_id", "seg_idx", "ax", "ay", "bx", "by")
+    sc = spark.sparkContext
+    group = "lazy-pages-snap"
+    sc.setJobGroup(group, "snap a lazy pages input")
+    try:
+        n = P.snap_pages_to_edges(lazy, segs, 200.0).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n > 0
+    st = sc.statusTracker()
+    stages = [
+        st.getStageInfo(s) for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds
+    ]
+    scans = [s for s in stages if s is not None and s.numTasks == parts and s.numCompletedTasks]
+    assert len(scans) == 1, [(s.stageId, s.name) for s in scans]
