@@ -4,8 +4,10 @@
 table through ONE task -- fine at city scale, fatal at 10^9 rows. The
 classic fix (zipWithIndex's algorithm, DataFrame-native): range-partition
 by the order key, count rows per partition, broadcast the prefix-sum
-offsets, then number within partitions and add the offset. Two narrow
-passes + one tiny broadcast; identical output to the global window.
+offsets, then number within partitions and add the offset. The input runs
+once and is pinned, the range-partitioned layout is pinned, and the count
+and numbering passes read that pin; one tiny broadcast. Identical output
+to the global window.
 """
 
 from __future__ import annotations
@@ -22,12 +24,22 @@ def dense_index(
 ) -> DataFrame:
     """Add ``out_col`` = dense 0-based position of each row under the total
     order ``order_cols`` (list of column names or Columns; caller must
-    ensure the order is total, i.e. no ties, for determinism)."""
+    ensure the order is total, i.e. no ties, for determinism).
+
+    Runs five Spark jobs before it returns (under AQE): the range shuffle's
+    sampling job, the shuffle, pinning its output, and the per-partition
+    counts (two). The input is pinned (lazily: the sampling job fills the
+    pin) because the sampling job and the shuffle each read all of it, and
+    an unpinned lazy input, such as the step-11 fold behind
+    ``merge.finalize_edges``, would run twice. The shuffled layout is
+    pinned so the counts and the numbering see the same partitions
+    (counting and numbering one lazy query gave duplicate indices).
+    The numbering itself is lazy and runs in the caller's action."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    ranged = df.repartitionByRange(num_partitions, *cols)
+    ranged = df.localCheckpoint(eager=False).repartitionByRange(num_partitions, *cols)
     part = ranged.withColumn("__pid", F.spark_partition_id())
     part = part.localCheckpoint()  # pin partitioning: sizes and numbering must see the SAME layout
     sizes = {

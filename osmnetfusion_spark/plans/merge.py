@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import folds
 from ..functions.tags import clean_float_col
-from ..operators.groupedmap import cluster_by, complete_groups, concat_outputs, grouped_map_batched
+from ..operators.groupedmap import cluster_by, complete_groups, grouped_map_batched
 
 
 def py_list_str(l) -> str:
@@ -316,11 +316,11 @@ def _run_uv_batches(it):
     """mapInPandas runner for step 11 over :func:`cluster_by` partitions.
     Bodies of complete (__ku, __kv) groups come from
     :func:`complete_groups`; each body converts to a column-dict of numpy
-    arrays ONCE and the groups are processed as array slices. Per-group
-    OUTPUT construction matches the pandas twin
-    (``tests/_twins.py::fold_uv_group_pandas``): pd.DataFrame(recs) ->
-    missing schema cols as None -> one concat per body, so dtype/null
-    semantics through the Arrow boundary are the same."""
+    arrays ONCE, the groups are folded as array slices, and the records of
+    all its groups become ONE output frame (a pandas frame per group cost
+    ~70% of the fold). A schema column a record does not set is missing:
+    NaN or None in the frame, NULL once it crosses the Arrow boundary
+    (pinned by tests/test_merge_cv_equivalence.py)."""
     cols = [f.split(" ")[0].strip("`") for f in EDGE_OUT_SCHEMA.split(", ")]
     for body in complete_groups(it, _UV_KEYS):
         d = {c: body[c].to_numpy() for c in body.columns}
@@ -328,16 +328,11 @@ def _run_uv_batches(it):
         bounds = np.flatnonzero((ku[1:] != ku[:-1]) | (kv[1:] != kv[:-1])) + 1
         starts = np.concatenate([[0], bounds])
         ends = np.concatenate([bounds, [len(body)]])
-        frames = []
+        recs = []
         for lo, hi in zip(starts, ends):
-            recs = _fold_group_arrays(d, int(lo), int(hi))
-            if recs:
-                out = pd.DataFrame(recs)
-                for c in cols:
-                    if c not in out.columns:
-                        out[c] = None
-                frames.append(out[cols])
-        yield from concat_outputs(frames)
+            recs.extend(_fold_group_arrays(d, int(lo), int(hi)))
+        if recs:
+            yield pd.DataFrame(recs, columns=cols)
 
 
 def merge_edges(edges: DataFrame) -> DataFrame:

@@ -2,11 +2,12 @@
 
 `merge._run_uv_batches` / `_fold_group_arrays` / `_an_edge_cv` replaced the
 per-group pandas fold (`fold_uv_group_pandas` / `an_edge_pandas`, kept as
-the reference twin in tests/_twins.py) for speed; every output value must be identical. The
-crafted groups below force the exotic branches the synthetic city rarely
-hits: cycleway lane attributes, parking lanes, width_cycle_path weighting,
-bike-only oneway motorized loss, all-None columns, NaN bearings, self-loop
-partner drops, and the no-eligible-partner (no output) case.
+the reference twin in tests/_twins.py) for speed; every row Spark stores
+from it must be identical. The crafted groups below force the exotic
+branches the synthetic city rarely hits: cycleway lane attributes, parking
+lanes, width_cycle_path weighting, bike-only oneway motorized loss,
+all-None columns, NaN bearings, self-loop partner drops, and the
+no-eligible-partner (no output) case.
 """
 
 from __future__ import annotations
@@ -99,15 +100,30 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def _eq(a, b) -> bool:
-    """Value equality where None == None and NaN == NaN (both are 'missing'
-    through the Arrow boundary for the dtypes each lands in)."""
+    """Value equality where None == None and NaN == NaN, and a missing
+    value must be missing in the same KIND (None or NaN) on both sides.
+    This is stricter than the Arrow boundary, which stores both kinds as
+    NULL in double, boolean and string columns
+    (:func:`test_arrow_boundary_stores_none_and_nan_as_null`)."""
     a_miss = a is None or (isinstance(a, float) and a != a)
     b_miss = b is None or (isinstance(b, float) and b != b)
     if a_miss or b_miss:
-        # missing values must agree in KIND too: None stays null through
-        # Arrow while float NaN stays NaN in a double column
         return (a is None) == (b is None) and a_miss == b_miss
     return a == b
+
+
+def _stored(spark, chunks: list[pd.DataFrame]) -> list:
+    """The rows Spark stores for a runner's output chunks: each chunk
+    crosses the Arrow boundary through ``mapInPandas`` with the step-11
+    schema, as in ``merge.merge_edges``; sorted by output key."""
+
+    def emit(it):
+        for _ in it:
+            pass
+        yield from chunks
+
+    rows = spark.range(1, numPartitions=1).mapInPandas(emit, merge.EDGE_OUT_SCHEMA).collect()
+    return sorted(rows, key=lambda r: (r["__main_osmid"], r["g_reversed"]))
 
 
 def _run_pandas_batches(it):
@@ -147,20 +163,53 @@ def _run_pandas_batches(it):
             yield out
 
 
-def test_cv_fold_matches_pandas_fold():
+def test_cv_fold_matches_pandas_fold(spark):
+    """The array-view runner stores the same rows as the original
+    per-group pandas runner. Compared after the Arrow boundary: the runner
+    builds one frame per body, where a missing value may be NaN that the
+    per-group frames held as None; Spark stores both as NULL."""
     pdf = _crafted()
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", FutureWarning)
-        old = pd.concat(list(_run_pandas_batches(iter([pdf]))), ignore_index=True)
-        new = pd.concat(list(merge._run_uv_batches(iter([pdf]))), ignore_index=True)
-    old, new = _norm(old), _norm(new)
-    assert list(old.columns) == list(new.columns) == COLS
-    assert len(old) == len(new)
+        old = _stored(spark, list(_run_pandas_batches(iter([pdf]))))
+    new = _stored(spark, list(merge._run_uv_batches(iter([pdf]))))
+    assert old and len(old) == len(new)
+    assert list(old[0].asDict()) == list(new[0].asDict()) == COLS
     for c in COLS:
-        o, n = old[c].tolist(), new[c].tolist()
-        assert all(_eq(a, b) for a, b in zip(o, n)), (
-            f"column {c} differs: {o} vs {n}"
-        )
+        o, n = [r[c] for r in old], [r[c] for r in new]
+        assert o == n, f"column {c} differs: {o} vs {n}"
+
+
+def test_arrow_boundary_stores_none_and_nan_as_null(spark):
+    """``mapInPandas`` stores both None and NaN as NULL in double, boolean,
+    string and long columns, whatever the pandas dtype holding them: the
+    fact the Arrow-boundary comparison above rests on."""
+    chunk = pd.DataFrame(
+        {
+            "d": pd.Series([None, np.nan, 1.5], dtype=object),
+            "f": np.array([np.nan, np.nan, 2.0]),
+            "b": pd.Series([None, np.nan, True], dtype=object),
+            "s": pd.Series([None, np.nan, "x"], dtype=object),
+            "l": pd.Series([None, np.nan, 3], dtype=object),
+            "a": pd.Series([np.nan, np.nan, np.nan], dtype=object),
+        }
+    )
+
+    def emit(it):
+        for _ in it:
+            pass
+        yield chunk
+
+    rows = (
+        spark.range(1, numPartitions=1)
+        .mapInPandas(emit, "d double, f double, b boolean, s string, l long, a boolean")
+        .collect()
+    )
+    assert [tuple(r) for r in rows] == [
+        (None, None, None, None, None, None),
+        (None, None, None, None, None, None),
+        (1.5, 2.0, True, "x", 3, None),
+    ]
 
 
 def test_cv_fold_carry_across_batches():

@@ -145,3 +145,19 @@ def test_cc_distributed_fallback_matches_driver_path(spark, monkeypatch):
     assert seen and all(n > limit for n, limit in seen)
     assert got == want
     assert len({c for _, c in want}) < len(want)  # real multi-node components
+
+
+def test_durable_fold_runs_once_per_stage(spark, tmp_path, monkeypatch):
+    """A durable run emits each step-11 link once: the g_id dense index
+    pins the fold output before its range shuffle, so neither the
+    sampling job nor the shuffle re-runs the fold."""
+    from _udfcount import udf_counts
+    from osmnetfusion_spark.checkpoint import Snapshotter
+
+    tables = synth.city_to_spark(spark, synth.synthetic_city(1))
+    snap = Snapshotter(spark, str(tmp_path / "wh"))
+    counts = udf_counts(spark, monkeypatch)
+    pipeline.run_full(spark, tables, snap=snap)
+    rows = snap.manifest["stages"]["p3_final_edges"]["rows"]
+    assert rows > 0
+    assert counts("_run_uv_batches")[1] == rows
