@@ -2649,10 +2649,10 @@ def q_cycleway_precedence(spark, sf_dir):
     per group through the engine's batched grouped-map (the same code path
     step 11 uses). Derivation avoids the 'no'-removal micro-rule (covered
     by the golden pipeline) so the oracle is the pure precedence cascade."""
-    import pandas as pd
+    import numpy as np
 
     from .functions import folds
-    from .operators.groupedmap import grouped_map_batched
+    from .operators.groupedmap import GroupView, grouped_map_batched
     from .plans.merge import py_list_str
 
     p = _t(spark, sf_dir, "part")
@@ -2674,13 +2674,12 @@ def q_cycleway_precedence(spark, sf_dir):
         pick(23, 9, {0: "track"}).alias("cycleway:both"),
     )
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            [{
-                "grp": int(pdf["grp"].iloc[0]),
-                "b_attribut": py_list_str(folds.cycleway_attributes_py(pdf)),
-            }]
-        )
+    def fold(d: dict, lo: int, hi: int) -> list[dict]:
+        cv = GroupView(d, np.arange(lo, hi))
+        return [{
+            "grp": int(d["grp"][lo]),
+            "b_attribut": py_list_str(folds.cycleway_attributes_cv(cv)),
+        }]
 
     return grouped_map_batched(base, ["grp"], fold, "grp long, b_attribut string").orderBy("grp")
 

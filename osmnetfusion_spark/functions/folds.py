@@ -6,9 +6,9 @@ BicycleEdge/MotorizedEdge classes ``:1412-2152``) are order-sensitive
 greedy folds over *small groups* (nodes of one cluster; parallel edges of
 one node pair). The reference's own ``mp.Pool`` partitioning by uv-pair
 (``p3_functions.py:913-922``) proves the group is the correct shuffle key;
-in Spark each group is processed inside ``applyInPandas`` with the helpers
-below, which reimplement the reference's value semantics exactly (verified
-against the same truth tables as :mod:`.tags`).
+in Spark each group is folded by ``groupedmap.grouped_map_batched`` with
+the helpers below, which reimplement the reference's value semantics
+exactly (verified against the same truth tables as :mod:`.tags`).
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ import math
 import re
 
 import numpy as np
-import pandas as pd
 
 _NONWORD_RE = re.compile(r"[^\w,]")
 
@@ -128,14 +127,9 @@ def _norm_old_osmid_one(x):
     return [x]
 
 
-def norm_old_osmid(series: pd.Series) -> pd.Series:
+def norm_old_osmid_list(vals) -> list:
     """Reference old_osmid prep (p3_functions.py:1584-1585): parse
     "[...]"-strings, wrap scalars into lists, NaN -> []."""
-    return series.map(_norm_old_osmid_one)
-
-
-def norm_old_osmid_list(vals) -> list:
-    """List twin of :func:`norm_old_osmid` for the array-view fold."""
     return [_norm_old_osmid_one(x) for x in vals]
 
 
@@ -179,70 +173,19 @@ def _uniq(series) -> list:
     return seen
 
 
-# ----------------------------------------------------- bike attribute fold
-
-_BIKE_ATTR_RANK = ["no", "track", "lane", "advisory", "exclusive.", "exclusive"]
-
-
-def _get_bike_attr(df: pd.DataFrame, tag: str, prefix: str) -> list:
-    """BicycleEdge.getBikeAttr, p3_functions.py:1988-1998."""
-    if tag not in df.columns:
-        return []
-    attr = [
-        x
-        for x in df[tag]
-        if (x not in ["", "pictogram"]) and (x is not None) and (x == x)
-    ]
-    if ("no" in attr) and len(attr) > 1:
-        attr.remove("no")
-    for i, a in enumerate(attr):
-        if isinstance(a, list):
-            attr[i] = sorted(
-                a, key=lambda x: _BIKE_ATTR_RANK.index(x) if x in _BIKE_ATTR_RANK else 0
-            )[-1]
-    return [f"{prefix}{x}" for x in attr]
-
-
-def cycleway_attributes_py(df: pd.DataFrame) -> list:
-    """BicycleEdge attribute precedence fold, p3_functions.py:1999-2021:
-    left/right lane tags beat side tags beat plain cycleway/both."""
-    attr1 = _get_bike_attr(df, "cycleway:left:lane", "left_lane_")
-    attr2 = _get_bike_attr(df, "cycleway:right:lane", "right_lane_")
-    attr3, attr4, attr5 = [], [], []
-    if len(attr1) == 0:
-        attr3 = _get_bike_attr(df, "cycleway:left", "left_")
-    if len(attr2) == 0:
-        attr4 = _get_bike_attr(df, "cycleway:right", "right_")
-    if ((len(attr1) == 0) and (len(attr3) == 0)) or ((len(attr2) == 0) and (len(attr4) == 0)):
-        attr5 = _get_bike_attr(df, "cycleway", "")
-        attr5 += _get_bike_attr(df, "cycleway:both", "")
-        if ("no" in attr5) and len(attr5) > 1:
-            attr5.remove("no")
-    flat = []
-    for sub in (attr1, attr2, attr3, attr4, attr5):
-        for a in sub:
-            if isinstance(a, list):
-                flat.extend(a)
-            else:
-                flat.append(a)
-    return sorted(set(flat))
-
-
-# --------------------------------------------- array-view (cv) fold twins
-# The pandas helpers operate on per-group DataFrames; at 30k+ groups
-# the per-group Series/DataFrame boxing dominated the merge stage (~19 ms
-# per 2-row group, guide §4.2). The `_cv` twins below implement the SAME
-# value semantics over a lightweight column-dict view (`merge._GroupView`)
-# whose .col(name) returns a plain numpy slice. Every pandas construct is
-# mirrored explicitly:
+# ------------------------------------------------ array-view (cv) helpers
+# At 30k+ groups, per-group Series/DataFrame boxing dominated the merge
+# stage (~19 ms per 2-row group, guide §4.2). The `_cv` helpers below
+# implement the reference's value semantics over a lightweight
+# `groupedmap.GroupView` whose .col(name) returns a plain numpy slice.
+# Every pandas construct of the reference is mirrored explicitly:
 # - Series.isin(vals)        -> _isin (set membership; NaN never matches)
 # - object-Series ==/!= x    -> numpy elementwise compare (None != '' is
 #                               True in both, NaN != NaN is True in both)
 # - float-Series <= x        -> numpy compare (NaN -> False in both)
 # - Series.max() skipna      -> _nanmax
-# The pandas mode-access, row-subset and parking twins live in
-# tests/_twins.py; test_merge_cv_equivalence pins cv == pandas on the same
-# groups.
+# Their pandas twins live in tests/_twins.py; test_merge_cv_equivalence
+# pins cv == pandas on the same groups.
 
 
 def _isin(arr, values) -> np.ndarray:
@@ -351,7 +294,11 @@ def motorized_mask_cv(cv) -> np.ndarray:
     return np.ones(len(cv), dtype=bool)
 
 
+_BIKE_ATTR_RANK = ["no", "track", "lane", "advisory", "exclusive.", "exclusive"]
+
+
 def _get_bike_attr_cv(cv, tag: str, prefix: str) -> list:
+    """BicycleEdge.getBikeAttr, p3_functions.py:1988-1998."""
     if not cv.has(tag):
         return []
     attr = [
@@ -370,6 +317,8 @@ def _get_bike_attr_cv(cv, tag: str, prefix: str) -> list:
 
 
 def cycleway_attributes_cv(cv) -> list:
+    """BicycleEdge attribute precedence fold, p3_functions.py:1999-2021:
+    left/right lane tags beat side tags beat plain cycleway/both."""
     attr1 = _get_bike_attr_cv(cv, "cycleway:left:lane", "left_lane_")
     attr2 = _get_bike_attr_cv(cv, "cycleway:right:lane", "right_lane_")
     attr3, attr4, attr5 = [], [], []

@@ -139,15 +139,6 @@ def py_list_string(arr: Column, quoted: bool = True) -> Column:
 # -------------------------------------------------------------- merge folds
 
 
-def weighted_mean_agg(value: Column, weight: Column) -> Column:
-    """Length-weighted average (`np.average(weights=lengths)`,
-    ``p3_functions.py:1917-1947``): rows with null value contribute
-    neither numerator nor denominator."""
-    num = F.sum(F.when(value.isNotNull(), value * weight))
-    den = F.sum(F.when(value.isNotNull(), weight))
-    return num / den
-
-
 def parking_union_agg(col: Column) -> Column:
     """A9: distinct parking values minus {no, no_stopping, fire_lane, ''}."""
     return F.array_sort(

@@ -264,28 +264,6 @@ def contamination_check(
 # ---------------------------------------------------------------- MinHash
 
 
-def minhash_signature(text: Column, num_hashes: int = 16, n: int = 3) -> Column:
-    """MinHash signature: array of k minima of affine re-hashes.
-
-    sig_i = min over shingles s of (a_i * poly(s) + b_i) mod P. Empty
-    shingle set -> nulls (filtered by callers).
-
-    Definitional column form (exact SQL twin); hot paths should compute
-    the shingle array via :func:`shingle_hashes_fast` and apply the
-    re-hash minima to that column instead (see :func:`lsh_candidate_pairs`)
-    -- the nested HOFs here are interpreted, ~15x slower.
-    """
-    sh = shingle_hashes(text, n)
-
-    def rehash(i: int):
-        a, b = MINHASH_A[i], MINHASH_B[i]
-        return lambda h: (F.lit(a) * h + F.lit(b)) % POLY_MOD
-
-    return F.array(
-        *[F.array_min(F.transform(sh, rehash(i))) for i in range(num_hashes)]
-    )
-
-
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -413,30 +391,6 @@ def simhash_sql(text: str, bits: int = SIMHASH_BITS) -> str:
         f"list_transform(list_zip({counters}, range(0, {bits})), "
         f"p -> CASE WHEN p[1] > 0 THEN (1::BIGINT << p[2]) ELSE 0::BIGINT END)), "
         f"(a, b) -> a + b)"
-    )
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 8,
-    block_col: str | None = "lang",
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance <= max_hamming."""
-    base = fan_out(df).select(
-        F.col(id_col).alias("id"),
-        (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
-        simhash(F.col(text_col)).alias("sh"),
-    )
-    a = base.select(F.col("id").alias("id_a"), "blk", F.col("sh").alias("sh_a"))
-    b = base.select(F.col("id").alias("id_b"), "blk", F.col("sh").alias("sh_b"))
-    return (
-        a.join(b, "blk")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
 
 

@@ -195,27 +195,6 @@ def decode_png(
         prev = cur.astype(int)
     return w, h, (out.reshape(h, w, nch) if nch == 3 else out)
 
-MEDIA_META_SCHEMA = (
-    "byte_len bigint, digest_md5 string, magic string, modality string"
-)
-
-
-def media_metadata(df: DataFrame, payload: str = "html") -> DataFrame:
-    """Typed metadata for a binary column -- pure column expressions."""
-    magic = F.hex(F.substring(F.col(payload), 1, 4))
-    return df.withColumns(
-        {
-            "byte_len": F.octet_length(F.col(payload)).cast("long"),
-            "digest_md5": F.md5(F.col(payload)),
-            "magic": magic,
-            "modality": F.when(magic.startswith("FFD8"), "image/jpeg")
-            .when(magic.startswith("89504E47"), "image/png")
-            .when(magic.startswith("494433"), "audio/mp3")
-            .otherwise("application/octet-stream"),
-        }
-    )
-
-
 def decode_and_featurize(
     df: DataFrame,
     payload: str = "html",
@@ -281,24 +260,3 @@ def decode_and_featurize(
             )
 
     return df.select(id_col, payload).mapInPandas(run, schema=schema)
-
-
-def frame_sample_plan(
-    df: DataFrame, payload: str = "html", id_col: str = "url", every_n_bytes: int = 64
-) -> DataFrame:
-    """'Frame sampling' plumbing: one row per sampled offset of the payload.
-
-    Stands in for video frame extraction: the explode pattern, offsets, and
-    per-frame keys are the real plumbing; the sampled byte is the fake
-    frame. Pure column expressions (no UDF).
-    """
-    n = F.octet_length(F.col(payload))
-    offsets = F.sequence(F.lit(0), F.greatest((n - 1) / every_n_bytes, F.lit(0)).cast("int"))
-    return df.select(
-        id_col,
-        F.explode(offsets).alias("frame_idx"),
-        F.ascii(
-            F.substring(F.col(payload).cast("string"), F.lit(1), F.lit(1))
-        ).alias("_unused_probe"),
-        F.octet_length(F.col(payload)).alias("byte_len"),
-    ).withColumn("frame_offset", F.col("frame_idx") * every_n_bytes).drop("_unused_probe")

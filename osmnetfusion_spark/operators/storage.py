@@ -20,7 +20,7 @@ bucket metadata lives in the table definition, not the files.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -49,13 +49,3 @@ def write_partitioned(
     """Directory-partitioned parquet: reads filtered on the partition
     columns prune to matching directories (PartitionFilters)."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str]
-) -> DataFrame:
-    """Equi-join two same-bucketed catalog tables on their bucket keys.
-
-    With matching bucket specs the physical plan has no Exchange on
-    either side (plan-shape test pins this)."""
-    return spark.table(left_table).join(spark.table(right_table), on)

@@ -4,9 +4,11 @@ The reference folds merged groups into Node/Link/AnEdge/WalkEdge/
 BicycleEdge/MotorizedEdge objects (p3_functions.py:1412-2152) inside a
 greedy loop (:654-790). Both folds are *per-group* (cluster id; unordered
 uv pair) -- the reference's own mp.Pool partitions step 11 by uv-pair sum
-(:913-922), proving the group is the shuffle key. Here each fold is an
-``applyInPandas`` grouped map over that exact key, with the group-internal
-greedy order made explicit: ``(highway_rank desc, osmid asc)``.
+(:913-922), proving the group is the shuffle key. Here both folds run
+through ``groupedmap.grouped_map_batched`` over that exact key, as array
+folds over the column slices of one group (no per-group pandas frame),
+with the group-internal greedy order made explicit: ``(highway_rank
+desc, osmid asc)``.
 
 Faithfulness notes (all verified against the reference source):
 - the "zigzag drop" rule (:768-774) is dead code in the current reference
@@ -23,13 +25,12 @@ Faithfulness notes (all verified against the reference source):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import folds
 from ..functions.tags import clean_float_col
-from ..operators.groupedmap import cluster_by, complete_groups, grouped_map_batched
+from ..operators.groupedmap import GroupView, grouped_map_batched
 
 
 def py_list_str(l) -> str:
@@ -51,41 +52,45 @@ NODE_OUT_SCHEMA = (
 )
 
 
-def merge_nodes(nodes: DataFrame) -> DataFrame:
-    """Step 10 (p3_functions.py:654-698 + Node :1412-1474): fold each
-    cluster into one output node. g_infra is sorted (the reference uses
+def _fold_node_group(d: dict, lo: int, hi: int) -> list[dict]:
+    """Step 10 (p3_functions.py:654-698 + Node :1412-1474): fold one
+    cluster ``[lo, hi)`` into one output node -- array twin of
+    ``tests/_twins.py::merge_node_group_pandas``. The representative is the
+    first self-rep (``osmid == merged_by``) in ``(highway_rank desc, osmid
+    asc)`` order, else the first row. g_infra is sorted (the reference uses
     ``list(set(...))`` whose order is hash-seed dependent -- sorting is the
     deterministic refinement of the same set)."""
+    osmid = d["osmid"][lo:hi]
+    rank = d["highway_rank"][lo:hi].astype(float)
+    order = lo + np.lexsort((osmid, -rank))
+    self_rep = d["osmid"][order] == d["merged_by"][order]
+    rep = int(order[self_rep.argmax()])  # argmax is 0 without a self-rep
+    infra = sorted(
+        set(folds.listify_py(d["highway"][lo:hi]) + folds.listify_py(d["crossing"][lo:hi]))
+    )
+    old = folds.norm_old_osmid_list(d["old_osmid"][lo:hi]) if "old_osmid" in d else []
+    l_osmid = folds.listify_py(old, as_int=True)
+    return [
+        {
+            "g_id": int(d["merged_by"][rep]),
+            "g_x": float(d["cx"][rep]),
+            "g_y": float(d["cy"][rep]),
+            "g_infra": py_list_str(infra),
+            "g_crossing": "crossing" in infra,
+            "g_signals": "traffic_signals" in infra,
+            "l_id": py_list_str(folds.listify_py(osmid, as_int=True)),
+            "l_osmid": py_list_str(l_osmid) if l_osmid else None,
+            "l_hw_conn": py_list_str(folds.listify_py(d["highway_conn"][lo:hi])),
+            "l_hw_rank": py_list_str(
+                folds.listify_py(np.where(np.isnan(rank), 0.0, rank), as_int=True)
+            ),
+        }
+    ]
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["highway_rank", "osmid"], ascending=[False, True])
-        rep = pdf[pdf.osmid == pdf.merged_by]
-        rep = rep.iloc[0] if len(rep) else pdf.iloc[0]
-        infra = sorted(
-            set(folds.listify_py(pdf.highway) + folds.listify_py(pdf.crossing))
-        )
-        old = folds.norm_old_osmid(pdf.old_osmid) if "old_osmid" in pdf.columns else pd.Series([[]])
-        l_osmid = folds.listify_py(old, as_int=True)
-        return pd.DataFrame(
-            [
-                {
-                    "g_id": int(rep.merged_by),
-                    "g_x": float(rep.cx),
-                    "g_y": float(rep.cy),
-                    "g_infra": py_list_str(infra),
-                    "g_crossing": "crossing" in infra,
-                    "g_signals": "traffic_signals" in infra,
-                    "l_id": py_list_str(folds.listify_py(pdf.osmid, as_int=True)),
-                    "l_osmid": py_list_str(l_osmid) if l_osmid else None,
-                    "l_hw_conn": py_list_str(folds.listify_py(pdf.highway_conn)),
-                    "l_hw_rank": py_list_str(
-                        folds.listify_py(pdf.highway_rank.fillna(0.0), as_int=True)
-                    ),
-                }
-            ]
-        )
 
-    return grouped_map_batched(nodes, ["merged_by"], fold, NODE_OUT_SCHEMA)
+def merge_nodes(nodes: DataFrame) -> DataFrame:
+    """Step 10: fold each cluster (``merged_by``) into one output node."""
+    return grouped_map_batched(nodes, ["merged_by"], _fold_node_group, NODE_OUT_SCHEMA)
 
 
 # ------------------------------------------------------------------ step 11
@@ -118,32 +123,6 @@ _EDGE_STR_COLS = [
 ]
 
 
-class _GroupView:
-    """Lightweight column view of one uv group: positions into the batch's
-    column-dict of numpy arrays. Replaces the per-group pandas DataFrame
-    boxing that dominated step 11 (~19 ms per 2-row group, ~35 s of the
-    scale-16 pipeline); ``.col`` returns a plain numpy slice the fold
-    helpers iterate exactly like they iterated Series values."""
-
-    __slots__ = ("d", "idx")
-
-    def __init__(self, d: dict, idx: np.ndarray):
-        self.d = d
-        self.idx = idx
-
-    def col(self, c: str) -> np.ndarray:
-        return self.d[c][self.idx]
-
-    def has(self, c: str) -> bool:
-        return c in self.d
-
-    def sub(self, mask: np.ndarray) -> "_GroupView":
-        return _GroupView(self.d, self.idx[mask])
-
-    def __len__(self) -> int:
-        return len(self.idx)
-
-
 def _an_edge_cv(
     d: dict, gidx: np.ndarray, direction: np.ndarray, main_i: int,
     uv: bool, rev_flag: bool,
@@ -155,8 +134,8 @@ def _an_edge_cv(
     sub_idx = gidx[direction == rev_flag]
     if len(sub_idx) == 0:
         return None
-    g = _GroupView(d, gidx)
-    s = _GroupView(d, sub_idx)
+    g = GroupView(d, gidx)
+    s = GroupView(d, sub_idx)
 
     def mv(c):
         return d[c][main_i]
@@ -312,29 +291,6 @@ def _fold_group_arrays(d: dict, lo: int, hi: int) -> list[dict]:
     return recs
 
 
-def _run_uv_batches(it):
-    """mapInPandas runner for step 11 over :func:`cluster_by` partitions.
-    Bodies of complete (__ku, __kv) groups come from
-    :func:`complete_groups`; each body converts to a column-dict of numpy
-    arrays ONCE, the groups are folded as array slices, and the records of
-    all its groups become ONE output frame (a pandas frame per group cost
-    ~70% of the fold). A schema column a record does not set is missing:
-    NaN or None in the frame, NULL once it crosses the Arrow boundary
-    (pinned by tests/test_merge_cv_equivalence.py)."""
-    cols = [f.split(" ")[0].strip("`") for f in EDGE_OUT_SCHEMA.split(", ")]
-    for body in complete_groups(it, _UV_KEYS):
-        d = {c: body[c].to_numpy() for c in body.columns}
-        ku, kv = d["__ku"], d["__kv"]
-        bounds = np.flatnonzero((ku[1:] != ku[:-1]) | (kv[1:] != kv[:-1])) + 1
-        starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [len(body)]])
-        recs = []
-        for lo, hi in zip(starts, ends):
-            recs.extend(_fold_group_arrays(d, int(lo), int(hi)))
-        if recs:
-            yield pd.DataFrame(recs, columns=cols)
-
-
 def merge_edges(edges: DataFrame) -> DataFrame:
     """Step 11: shuffle by unordered (new_u, new_v), fold per group.
 
@@ -371,7 +327,7 @@ def merge_edges(edges: DataFrame) -> DataFrame:
             if f.dataType.simpleString() == "string"
         }
     )
-    return cluster_by(prepped, _UV_KEYS).mapInPandas(_run_uv_batches, schema=EDGE_OUT_SCHEMA)
+    return grouped_map_batched(prepped, _UV_KEYS, _fold_group_arrays, EDGE_OUT_SCHEMA)
 
 
 # --------------------------------------------------------------- steps 12/13

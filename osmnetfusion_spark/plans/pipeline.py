@@ -251,8 +251,8 @@ def run_simplification(
         m["step12_edges"] = final_edges.count()
     lap("step11_13")
     if metrics is not None:
-        for mode, flag in (("walk", "access_wal"), ("bike", "access_bik"), ("motorized", "access_mot")):
-            m[f"edges_{mode}"] = final_edges.filter(F.coalesce(F.col(flag), F.lit(False))).count()
+        for mode in ("walk", "bike", "motorized"):
+            m[f"edges_{mode}"] = merge.edges_for_modes(final_edges, [mode]).count()
     return final_nodes, final_edges
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .. import h3idx
 from ..functions import geo
+from ..operators.groupedmap import grouped_map_batched
 from ..operators.partitioning import fan_out
 
 # reference configFile.py:171-186
@@ -493,6 +494,39 @@ def _kmeans_det(points: np.ndarray, k: int, seed: int = 42, iters: int = 50) -> 
     return assign
 
 
+def _cluster_fold(threshold: int):
+    """The steps-5/7 fold over one component ``[lo, hi)`` -- array twin of
+    ``tests/_twins.py::cluster_group_pandas``. Members are ordered by
+    ``(highway_rank desc, osmid asc)``; a component of at least
+    ``threshold`` members is split by :func:`_kmeans_det`. Each cluster's
+    rep is its first member, its centroid the mean of its top-rank
+    members; one record per member."""
+
+    def _fold_cluster(d: dict, lo: int, hi: int) -> list[dict]:
+        osmid = d["osmid"][lo:hi]
+        rank = d["highway_rank"][lo:hi].astype(float)
+        order = np.lexsort((osmid, -rank))
+        osmid, rank = osmid[order], rank[order]
+        pts = np.column_stack([d["x"][lo:hi][order], d["y"][lo:hi][order]]).astype(float)
+        n = hi - lo
+        k = 1 if n < threshold else n // threshold + 1
+        assign = np.zeros(n, dtype=int) if k == 1 else _kmeans_det(pts, k)
+        recs: list[dict] = []
+        for c in range(k):
+            m = assign == c
+            if not m.any():
+                continue
+            r = rank[m]
+            top = pts[m][r == (np.nan if np.isnan(r).all() else np.nanmax(r))]
+            # 1-D column means sum pairwise, as the pandas Series mean does
+            cx, cy = (float(top[:, 0].mean()), float(top[:, 1].mean())) if len(top) else (None, None)
+            rep = int(osmid[m][0])
+            recs.extend({"osmid": int(o), "merged_by": rep, "cx": cx, "cy": cy} for o in osmid[m])
+        return recs
+
+    return _fold_cluster
+
+
 def cluster_nodes(
     nodes: DataFrame,
     spark: SparkSession,
@@ -515,38 +549,9 @@ def cluster_nodes(
         "osmid", "x", "y", "highway_rank", "component"
     )
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["highway_rank", "osmid"], ascending=[False, True]
-        ).reset_index(drop=True)
-        if len(pdf) < threshold:
-            groups = [pdf]
-        else:
-            pts = pdf[["x", "y"]].to_numpy()
-            k = len(pdf) // threshold + 1
-            assign = _kmeans_det(pts, k)
-            groups = [pdf[assign == c] for c in range(k) if (assign == c).any()]
-        outs = []
-        for g in groups:
-            rep = g.iloc[0]
-            top = g[g.highway_rank == g.highway_rank.max()]
-            cx, cy = float(top.x.mean()), float(top.y.mean())
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "osmid": g.osmid.to_numpy(),
-                        "merged_by": np.int64(rep.osmid),
-                        "cx": cx,
-                        "cy": cy,
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    from ..operators.groupedmap import grouped_map_batched
-
     folded = grouped_map_batched(
-        in_comp, ["component"], fold, "osmid long, merged_by long, cx double, cy double"
+        in_comp, ["component"], _cluster_fold(threshold),
+        "osmid long, merged_by long, cx double, cy double",
     )
     out = member.drop("component").join(folded, "osmid", "left")
     if pass2:

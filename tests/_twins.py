@@ -6,6 +6,12 @@ output between the two.
 - :func:`an_edge_pandas` / :func:`fold_uv_group_pandas`: the pandas
   parallel-edge fold, twin of ``merge._an_edge_cv`` /
   ``merge._fold_group_arrays`` (tests/test_merge_cv_equivalence.py);
+- :func:`merge_node_group_pandas`: the pandas step-10 fold, twin of
+  ``merge._fold_node_group``, and :func:`cluster_group_pandas`: the
+  pandas steps-5/7 fold, twin of ``simplify._cluster_fold``
+  (tests/test_groupedmap.py);
+- :func:`cycleway_attributes_py` and :func:`norm_old_osmid`: pandas twins
+  of ``folds.cycleway_attributes_cv`` and ``folds.norm_old_osmid_list``;
 - :func:`split_rows_loop`: twin of ``simplify._split_fast``
   (tests/test_plans.py::test_split_fast_matches_loop);
 - :func:`reassign_batch_loop`: twin of ``simplify._reassign_batch``
@@ -39,10 +45,12 @@ from osmnetfusion_spark.functions.folds import (
     NON_MOTORIZED_HW,
     WALK_HW_ALL,
     WALK_HW_STRICT,
+    _BIKE_ATTR_RANK,
     _uniq,
 )
 from osmnetfusion_spark.operators import spatial
 from osmnetfusion_spark.plans.merge import EDGE_OUT_SCHEMA, py_list_str
+from osmnetfusion_spark.plans.simplify import _kmeans_det
 
 _TAG_RE = re.compile(rb"<[^>]+>")
 _WS_RE = re.compile(rb"\s+")
@@ -110,7 +118,7 @@ def an_edge_pandas(df: pd.DataFrame, main: pd.Series, uv: bool, rev_flag: bool) 
     rec["g_parkingL"] = py_list_str(pl)
     rec["g_parkingR"] = py_list_str(pr)
     rec["l_id"] = py_list_str(folds.listify_py(subset.osmid, as_int=True))
-    old = folds.norm_old_osmid(subset.old_osmid)
+    old = norm_old_osmid(subset.old_osmid)
     rec["l_osmid"] = py_list_str(folds.listify_py(old, as_int=True))
     rec["l_old_u"] = py_list_str(folds.listify_py(subset.old_u, as_int=True))
     rec["l_old_v"] = py_list_str(folds.listify_py(subset.old_v, as_int=True))
@@ -149,7 +157,7 @@ def an_edge_pandas(df: pd.DataFrame, main: pd.Series, uv: bool, rev_flag: bool) 
             rec["b_bikerack"] = any("bicycle_parking" in str(a) for a in am_on)
             cat_rows = br[br.cycleway_category != br.highway]
             rec["b_category"] = py_list_str(folds.listify_py(cat_rows.cycleway_category))
-            rec["b_attribut"] = py_list_str(folds.cycleway_attributes_py(br))
+            rec["b_attribut"] = py_list_str(cycleway_attributes_py(br))
             rec["b_segregat"] = py_list_str(folds.listify_py(br.segregated))
     if rec["access_mot"]:
         mr = motorized_rows(df)
@@ -166,7 +174,7 @@ def an_edge_pandas(df: pd.DataFrame, main: pd.Series, uv: bool, rev_flag: bool) 
 def fold_uv_group_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
     """Greedy per-uv-pair merge (p3_functions.py:700-790), group-local —
     the original pandas implementation (production path:
-    ``merge._fold_group_arrays`` via ``merge._run_uv_batches``)."""
+    ``merge._fold_group_arrays`` via ``groupedmap.grouped_map_batched``)."""
     pdf = pdf.sort_values(["highway_rank", "osmid"], ascending=[False, True]).reset_index(drop=True)
     # '' -> null normalization (Link init :1503) happens ONCE in the JVM
     # (merge_edges nullifs every string column before the shuffle) -- doing
@@ -235,6 +243,107 @@ def fold_uv_group_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
         if c not in out.columns:
             out[c] = None
     return out[cols] if len(out) else pd.DataFrame(columns=cols)
+
+
+def merge_node_group_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Step-10 fold of one cluster -- the original pandas implementation
+    (production path: ``merge._fold_node_group``)."""
+    pdf = pdf.sort_values(["highway_rank", "osmid"], ascending=[False, True])
+    rep = pdf[pdf.osmid == pdf.merged_by]
+    rep = rep.iloc[0] if len(rep) else pdf.iloc[0]
+    infra = sorted(set(folds.listify_py(pdf.highway) + folds.listify_py(pdf.crossing)))
+    old = norm_old_osmid(pdf.old_osmid) if "old_osmid" in pdf.columns else pd.Series([[]])
+    l_osmid = folds.listify_py(old, as_int=True)
+    return pd.DataFrame(
+        [
+            {
+                "g_id": int(rep.merged_by),
+                "g_x": float(rep.cx),
+                "g_y": float(rep.cy),
+                "g_infra": py_list_str(infra),
+                "g_crossing": "crossing" in infra,
+                "g_signals": "traffic_signals" in infra,
+                "l_id": py_list_str(folds.listify_py(pdf.osmid, as_int=True)),
+                "l_osmid": py_list_str(l_osmid) if l_osmid else None,
+                "l_hw_conn": py_list_str(folds.listify_py(pdf.highway_conn)),
+                "l_hw_rank": py_list_str(
+                    folds.listify_py(pdf.highway_rank.fillna(0.0), as_int=True)
+                ),
+            }
+        ]
+    )
+
+
+def cluster_group_pandas(pdf: pd.DataFrame, threshold: int) -> pd.DataFrame:
+    """Steps-5/7 fold of one component -- the original pandas
+    implementation (production path: ``simplify._cluster_fold``)."""
+    pdf = pdf.sort_values(["highway_rank", "osmid"], ascending=[False, True]).reset_index(drop=True)
+    if len(pdf) < threshold:
+        groups = [pdf]
+    else:
+        pts = pdf[["x", "y"]].to_numpy()
+        k = len(pdf) // threshold + 1
+        assign = _kmeans_det(pts, k)
+        groups = [pdf[assign == c] for c in range(k) if (assign == c).any()]
+    outs = []
+    for g in groups:
+        rep = g.iloc[0]
+        top = g[g.highway_rank == g.highway_rank.max()]
+        cx, cy = float(top.x.mean()), float(top.y.mean())
+        outs.append(
+            pd.DataFrame(
+                {"osmid": g.osmid.to_numpy(), "merged_by": np.int64(rep.osmid), "cx": cx, "cy": cy}
+            )
+        )
+    return pd.concat(outs, ignore_index=True)
+
+
+def norm_old_osmid(series: pd.Series) -> pd.Series:
+    """Reference old_osmid prep (p3_functions.py:1584-1585) on a Series."""
+    return series.map(folds._norm_old_osmid_one)
+
+
+def _get_bike_attr(df: pd.DataFrame, tag: str, prefix: str) -> list:
+    """BicycleEdge.getBikeAttr, p3_functions.py:1988-1998."""
+    if tag not in df.columns:
+        return []
+    attr = [
+        x
+        for x in df[tag]
+        if (x not in ["", "pictogram"]) and (x is not None) and (x == x)
+    ]
+    if ("no" in attr) and len(attr) > 1:
+        attr.remove("no")
+    for i, a in enumerate(attr):
+        if isinstance(a, list):
+            attr[i] = sorted(
+                a, key=lambda x: _BIKE_ATTR_RANK.index(x) if x in _BIKE_ATTR_RANK else 0
+            )[-1]
+    return [f"{prefix}{x}" for x in attr]
+
+
+def cycleway_attributes_py(df: pd.DataFrame) -> list:
+    """BicycleEdge attribute precedence fold, p3_functions.py:1999-2021."""
+    attr1 = _get_bike_attr(df, "cycleway:left:lane", "left_lane_")
+    attr2 = _get_bike_attr(df, "cycleway:right:lane", "right_lane_")
+    attr3, attr4, attr5 = [], [], []
+    if len(attr1) == 0:
+        attr3 = _get_bike_attr(df, "cycleway:left", "left_")
+    if len(attr2) == 0:
+        attr4 = _get_bike_attr(df, "cycleway:right", "right_")
+    if ((len(attr1) == 0) and (len(attr3) == 0)) or ((len(attr2) == 0) and (len(attr4) == 0)):
+        attr5 = _get_bike_attr(df, "cycleway", "")
+        attr5 += _get_bike_attr(df, "cycleway:both", "")
+        if ("no" in attr5) and len(attr5) > 1:
+            attr5.remove("no")
+    flat = []
+    for sub in (attr1, attr2, attr3, attr4, attr5):
+        for a in sub:
+            if isinstance(a, list):
+                flat.extend(a)
+            else:
+                flat.append(a)
+    return sorted(set(flat))
 
 
 def split_rows_loop(pdf: pd.DataFrame) -> list[dict]:

@@ -4,11 +4,12 @@ After :func:`udf_counts` (until the test ends), every function passed to
 ``DataFrame.mapInPandas``, ``DataFrame.mapInArrow`` or
 ``GroupedData.applyInPandas`` is wrapped with two accumulators: one call
 per Python task (per group for ``applyInPandas``) and the rows the kernel
-emits. Counts are keyed by the kernel's ``__name__``::
+emits. Counts are keyed by the kernel's ``__name__`` (a
+``grouped_map_batched`` kernel carries its fold's name)::
 
     counts = udf_counts(spark, monkeypatch)
     merge.merge_edges(edges).write.parquet(path)   # plan built after the call
-    calls, rows = counts("_run_uv_batches")
+    calls, rows = counts("_fold_group_arrays")
 
 A kernel that runs twice per action (a plan re-executed by a second job)
 shows twice the rows its output holds.

@@ -1,9 +1,10 @@
-"""Pin the r6 array-view uv-merge fold to the original pandas fold.
+"""Pin the array-view uv-merge fold to the original pandas fold.
 
-`merge._run_uv_batches` / `_fold_group_arrays` / `_an_edge_cv` replaced the
-per-group pandas fold (`fold_uv_group_pandas` / `an_edge_pandas`, kept as
-the reference twin in tests/_twins.py) for speed; every row Spark stores
-from it must be identical. The crafted groups below force the exotic
+`merge._fold_group_arrays` / `_an_edge_cv`, run by
+`groupedmap.fold_bodies`, replaced the per-group pandas fold
+(`fold_uv_group_pandas` / `an_edge_pandas`, kept as the reference twin in
+tests/_twins.py) for speed; every row Spark stores from it must be
+identical. The crafted groups below force the exotic
 branches the synthetic city rarely hits: cycleway lane attributes, parking
 lanes, width_cycle_path weighting, bike-only oneway motorized loss,
 all-None columns, NaN bearings, self-loop partner drops, and the
@@ -19,6 +20,7 @@ import pandas as pd
 import pytest
 
 from _twins import fold_uv_group_pandas
+from osmnetfusion_spark.operators.groupedmap import GroupView, fold_bodies
 from osmnetfusion_spark.plans import merge
 
 COLS = [f.split(" ")[0].strip("`") for f in merge.EDGE_OUT_SCHEMA.split(", ")]
@@ -130,7 +132,7 @@ def _run_pandas_batches(it):
     """The ORIGINAL runner protocol (operators.groupedmap.grouped_map_batched
     with the pandas fold): per-batch body groups concatenated together, the
     straddling tail group folded separately from the carry. The chunking
-    must match `_run_uv_batches` exactly -- pandas concat dtype inference
+    must match the runner's exactly -- pandas concat dtype inference
     depends on which frames are concatenated together, and the Arrow
     boundary sees the chunks as produced."""
     carry = None
@@ -163,6 +165,12 @@ def _run_pandas_batches(it):
             yield out
 
 
+def _run_uv_batches(it):
+    """Step 11's batch function: the grouped-fold runner's body over
+    ``merge._fold_group_arrays``, as ``merge.merge_edges`` runs it."""
+    return fold_bodies(it, merge._UV_KEYS, merge._fold_group_arrays, COLS)
+
+
 def test_cv_fold_matches_pandas_fold(spark):
     """The array-view runner stores the same rows as the original
     per-group pandas runner. Compared after the Arrow boundary: the runner
@@ -172,7 +180,7 @@ def test_cv_fold_matches_pandas_fold(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", FutureWarning)
         old = _stored(spark, list(_run_pandas_batches(iter([pdf]))))
-    new = _stored(spark, list(merge._run_uv_batches(iter([pdf]))))
+    new = _stored(spark, list(_run_uv_batches(iter([pdf]))))
     assert old and len(old) == len(new)
     assert list(old[0].asDict()) == list(new[0].asDict()) == COLS
     for c in COLS:
@@ -214,11 +222,11 @@ def test_arrow_boundary_stores_none_and_nan_as_null(spark):
 
 def test_cv_fold_carry_across_batches():
     pdf = _crafted()
-    whole = pd.concat(list(merge._run_uv_batches(iter([pdf]))), ignore_index=True)
+    whole = pd.concat(list(_run_uv_batches(iter([pdf]))), ignore_index=True)
     # split mid-group: the carry protocol must reassemble the straddler
     cut = 4
     split = pd.concat(
-        list(merge._run_uv_batches(iter([pdf.iloc[:cut], pdf.iloc[cut:]]))),
+        list(_run_uv_batches(iter([pdf.iloc[:cut], pdf.iloc[cut:]]))),
         ignore_index=True,
     )
     w, s = _norm(whole), _norm(split)
@@ -236,7 +244,7 @@ def test_cv_fold_carry_across_batches():
 
 def test_cv_group_view_subset_semantics():
     d = {"x": np.array([1, 2, 3, 4]), "s": np.array(["a", None, "b", ""], dtype=object)}
-    cv = merge._GroupView(d, np.array([0, 2, 3]))
+    cv = GroupView(d, np.array([0, 2, 3]))
     assert list(cv.col("x")) == [1, 3, 4]
     sub = cv.sub(np.array([True, False, True]))
     assert list(sub.col("x")) == [1, 4]

@@ -160,4 +160,4 @@ def test_durable_fold_runs_once_per_stage(spark, tmp_path, monkeypatch):
     pipeline.run_full(spark, tables, snap=snap)
     rows = snap.manifest["stages"]["p3_final_edges"]["rows"]
     assert rows > 0
-    assert counts("_run_uv_batches")[1] == rows
+    assert counts("_fold_group_arrays")[1] == rows

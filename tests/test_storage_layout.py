@@ -39,7 +39,7 @@ def test_bucketed_join_is_exchange_free(spark, bucketed_tables):
     # decides whether an exchange appears
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = storage.bucketed_join(spark, left, right, ["edge_id"])
+        joined = spark.table(left).join(spark.table(right), ["edge_id"])
         plan = _plan(joined)
         assert "Exchange" not in plan, plan
         assert joined.count() == 20_000

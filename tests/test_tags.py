@@ -104,14 +104,6 @@ def test_py_list_string(spark):
     assert df2.select(tags.py_list_string(F.col("v"), quoted=False).alias("s")).collect()[0].s == "[1, 2]"
 
 
-def test_weighted_mean(spark):
-    df = spark.createDataFrame(
-        [(2.0, 10.0), (4.0, 30.0), (None, 100.0)], "v double, w double"
-    )
-    out = df.agg(tags.weighted_mean_agg(F.col("v"), F.col("w")).alias("m")).collect()[0].m
-    assert out == pytest.approx((2 * 10 + 4 * 30) / 40)
-
-
 # ------------------------------------------------------- mode access tables
 
 

@@ -119,77 +119,3 @@ def test_pmi_phrases_finds_planted_collocation(spark):
     # plan: distributed partial top-k, not a global window
     plan = TS.pmi_phrases(df, k=5)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
-
-
-# ------------------------------------------------------------ bpe_encode
-
-
-def test_bpe_encode_reproduces_trainer_tokens(spark):
-    """Encoding the training corpus with the trained merge list must
-    reproduce the trainer's own final token arrays (inference == the
-    training fold replayed)."""
-    import pandas as pd
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(TEXTS) * 2), "text": TEXTS * 2})
-    )
-    merges_df, tok_df = TS.bpe_train(df, n_merges=5)
-    merges = [
-        (r.left, r.right) for r in merges_df.orderBy("round").collect()
-    ]
-    enc = TS.bpe_encode(df, merges, checkpoint_every=2)
-    got = sorted(tuple(r.toks) for r in enc.collect())
-    want = sorted(tuple(r.toks) for r in tok_df.collect())
-    assert got == want
-
-
-def test_bpe_encode_unseen_text_sequential_twin(spark):
-    """Inference on UNSEEN text matches the sequential greedy scan; a NULL
-    text keeps its row, with NULL toks and n_tokens."""
-    import pandas as pd
-
-    train = spark.createDataFrame(pd.DataFrame({"doc_id": [0, 1, 2],
-                                                "text": TEXTS[:3]}))
-    merges_df, _ = TS.bpe_train(train, n_merges=4)
-    merges = [(r.left, r.right) for r in merges_df.orderBy("round").collect()]
-    unseen = ["the cat sat on a mat on a cat", "cat cat cat the the", None]
-    df = spark.createDataFrame(
-        list(zip([10, 11, 12], unseen)), "doc_id long, text string"
-    )
-    rows = TS.bpe_encode(df, merges).collect()
-    got = {r.doc_id: None if r.toks is None else list(r.toks) for r in rows}
-    assert {r.doc_id: r.n_tokens for r in rows}[12] is None
-
-    def seq_encode(s):
-        if s is None:
-            return None
-        toks = [t for t in s.split(" ") if t]
-        for left, right in merges:
-            out, i = [], 0
-            while i < len(toks):
-                if i + 1 < len(toks) and toks[i] == left and toks[i + 1] == right:
-                    out.append(left + TS.BPE_SEP + right)
-                    i += 2
-                else:
-                    out.append(toks[i])
-                    i += 1
-            toks = out
-        return toks
-
-    assert got == {10 + i: seq_encode(s) for i, s in enumerate(unseen)}
-
-
-def test_bpe_encode_empty_merges_is_whitespace_split(spark):
-    import pandas as pd
-
-    df = spark.createDataFrame(pd.DataFrame({"doc_id": [0], "text": ["a  b c"]}))
-    rows = TS.bpe_encode(df, []).collect()
-    assert list(rows[0].toks) == ["a", "b", "c"] and rows[0].n_tokens == 3
-
-
-def test_bpe_encode_validates_checkpoint_every(spark):
-    import pandas as pd
-
-    df = spark.createDataFrame(pd.DataFrame({"doc_id": [0], "text": ["x"]}))
-    with pytest.raises(ValueError):
-        TS.bpe_encode(df, [], checkpoint_every=0)
