@@ -354,7 +354,7 @@ def q_knn_snap(spark, sf_dir):
     p = doc_points(spark, sf_dir).select("doc_id", "lat", "lon")
     s = supplier_segments(spark, sf_dir)
     out = spatial.knn_join_segments(
-        p, s, radius_m=SNAP_RADIUS_M, point_id="doc_id", seg_id="edge_id"
+        p, s, radii=(SNAP_RADIUS_M,), point_id="doc_id", seg_id="edge_id"
     )
     return out.select(
         "doc_id", "edge_id", F.round("dist_m", 4).alias("dist_m")
@@ -2307,8 +2307,7 @@ def q_amenity_radius(spark, sf_dir):
         flat_kx=FLAT_KX,
     )
     nearest = spatial.knn_join_segments(
-        p, s, radius_m=200.0, point_id="doc_id", seg_id="edge_id",
-        flat_kx=FLAT_KX,
+        p, s, radii=(200.0,), point_id="doc_id", seg_id="edge_id", flat_kx=FLAT_KX,
     )
     nearby = pairs.groupBy("edge_id").agg(F.count(F.lit(1)).alias("n_nearby"))
     on = nearest.groupBy("edge_id").agg(F.count(F.lit(1)).alias("n_on"))

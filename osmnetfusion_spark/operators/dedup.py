@@ -18,14 +18,12 @@ scale the only shuffles are the groupBys/joins listed per function.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .partitioning import fan_out
 from .textstats import (
-    POLY_BASE, POLY_BASE2, POLY_MOD, POLY_MOD2, poly_hash, poly_hash64,
-    poly_hash_sql, tokens_col, tokens_sql,
+    POLY_MOD, poly_hash, poly_hash_sql, tokens_col, tokens_sql,
 )
 
 # deterministic affine MinHash parameters (public constants, any odd a works)

@@ -31,7 +31,7 @@ of the web-corpus operator surface grafted onto the engine (SURVEY §6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["derive_link_graph", "pagerank"]

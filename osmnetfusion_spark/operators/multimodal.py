@@ -27,7 +27,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # ------------------------------------------------------- pure-Python PNG
 # Minimal but genuine PNG codec (public spec: 8-byte signature, length-

@@ -2,8 +2,9 @@
 
 The reference's spatial predicates are shapely STRtree probes and
 ``sjoin_nearest`` calls with metre caps (``p2_enrichData.py:140, 453, 541,
-590``; ``p3_functions.py:406``). None of that distributes. Here every
-spatial join is the same two-phase plan:
+590``; ``p3_functions.py:406``). None of that distributes. Here the
+radius, point-kNN, point-in-polygon and intersection joins are the same
+two-phase plan:
 
 1. **candidate generation** -- both sides keyed by grid cells
    (:mod:`..h3idx`); the *small* (build) side is exploded to its cover cells
@@ -13,18 +14,19 @@ spatial join is the same two-phase plan:
    whole candidate stage is JVM-side whole-stage codegen and Catalyst/AQE
    handle the join strategy (broadcast for small builds, skew-split for hot
    cells).
-2. **exact refinement** -- closed-form point-to-segment distance as column
-   math (kNN), or a vectorized numpy kernel in a pandas UDF (ray-casting
-   PIP, segment-clip intersection length) where no closed form exists.
+2. **exact refinement** -- closed-form distance as column math (radius
+   and point-kNN joins), or a vectorized numpy kernel in a pandas UDF
+   (ray-casting PIP, segment-clip intersection length) where no closed
+   form exists.
 
 Ring-1 dilation is complete because :func:`..h3idx.pick_res` chooses the
 finest resolution whose cell short side still exceeds the join radius.
 
-The one exception is the escalating-radius segment snap
-(:func:`knn_join_segments_adaptive`): its build side is small enough to
-collect, so the same cells and distance terms go into a broadcast numpy
-index and each probe batch is joined and refined in one ``mapInArrow``
-kernel, with no shuffle.
+The kNN(1) point-to-segment snap (:func:`knn_join_segments`, every
+``sjoin_nearest`` onto edges) uses the same cells and distance terms, but
+collects them into a numpy index that is broadcast once; each probe batch
+is then joined and refined in one ``mapInArrow`` kernel, with no shuffle
+or aggregate.
 """
 
 from __future__ import annotations
@@ -45,9 +47,10 @@ from ..functions import geo
 from .partitioning import fan_out, scan_bytes
 
 
-# conservative ceiling for an explicit build-side broadcast: cover-cell
-# explosion multiplies the segment rows ~3-5x, and every executor holds a
-# full copy, so cap well below typical executor memory
+# conservative ceiling for an explicit build-side broadcast and for the
+# kNN segment index: cover-cell explosion multiplies the segment rows
+# ~3-5x, and every executor holds a full copy, so cap well below typical
+# executor memory
 BROADCAST_GUARD_BYTES = 256 << 20
 
 
@@ -155,10 +158,9 @@ def _segment_terms(segs: DataFrame, flat_kx: float | None = None) -> DataFrame:
     """Add the segment-only terms of :func:`..functions.geo.point_segment_dist_m`
     (``__kx, __abx, __aby, __v``) to ``segs``.
 
-    They are pure functions of the segment, so both kNN plans compute them
-    ONCE on the (tiny) build side: the per-pair expression -- which
-    Catalyst duplicates into the join condition -- stays small, and
-    :func:`knn_join_segments` and the snap kernel read the same bits.
+    They are pure functions of the segment, so they are computed ONCE per
+    segment, in Spark, and the snap kernel and its SQL oracle
+    (``tests/_twins.py::knn_struct_min_sql``) read the same bits.
     """
     m = F.lit(geo.M_PER_DEG)
     return (
@@ -171,93 +173,6 @@ def _segment_terms(segs: DataFrame, flat_kx: float | None = None) -> DataFrame:
         .withColumn("__abx", (F.col("bx") - F.col("ax")) * F.col("__kx"))
         .withColumn("__aby", (F.col("by") - F.col("ay")) * m)
         .withColumn("__v", F.col("__abx") * F.col("__abx") + F.col("__aby") * F.col("__aby"))
-    )
-
-
-def knn_join_segments(
-    points: DataFrame,
-    segments: DataFrame,
-    radius_m: float,
-    point_id: str = "point_id",
-    seg_id: str = "edge_id",
-    lat: str = "lat",
-    lon: str = "lon",
-    broadcast_build: bool = True,
-    carry: tuple[str, ...] = (),
-    flat_kx: float | None = None,
-) -> DataFrame:
-    """kNN(1) (<= radius_m) join of points to polyline *segments*.
-
-    ``segments`` must carry ``ax, ay, bx, by`` (from
-    :func:`explode_segments`). Returns one row per matched point with
-    ``seg_id``, ``dist_m`` and ``knn_rank`` (always 1). Deterministic ties:
-    ``(dist_m, seg_id)``.
-
-    Replaces the reference's ``sjoin_nearest(max_distance=...)`` snaps
-    (signals->nodes 20 m ``p2_enrichData.py:453``, amenities->edges 200 m
-    ``:541``, PT stops->edges 30 m ``:590``) and the graft's pages->edges
-    snap; each takes only the nearest match.
-
-    Plan: build side exploded to ring-1-dilated cover cells (small; stays
-    under the broadcast threshold, so the candidate join is SHUFFLE-FREE
-    and the per-candidate distance runs inside whole-stage codegen), then
-    ONE ``groupBy(point).agg(min(struct(dist, seg_id)))`` -- lexicographic
-    struct-min IS the kNN(1) rule. Spark has no hash-aggregate buffer for
-    ``min(struct)``, so this is a partial + final ``SortAggregate``: each
-    map partition's candidates are sorted on the point and collapsed to
-    one row per point before the only shuffle. The probe side is never
-    exploded.
-
-    ``broadcast_build``: hint when the SEGMENTS side is known small (the
-    simplified network vs a page corpus). Pass False when the segments
-    side scales with the network (enrichment joins: layer points probe a
-    planet-sized network) -- the plain equi-join lets AQE pick the
-    broadcast side from runtime sizes.
-    """
-    res = h3idx.pick_res(radius_m)
-    m = F.lit(geo.M_PER_DEG)
-    build = _segment_terms(
-        segments.select(F.col(seg_id).alias("__e"), "ax", "ay", "bx", "by"), flat_kx
-    ).withColumn("cell", F.explode(_ring1_cover(res)))
-    probe = fan_out(
-        points.select(point_id, lat, lon, *[c for c in carry if c not in (point_id, lat, lon)]),
-        point_id,
-    ).withColumn("cell", h3idx.cell_col(F.col(lat), F.col(lon), res))
-    apx = (F.col(lon) - F.col("ax")) * F.col("__kx")
-    apy = (F.col(lat) - F.col("ay")) * m
-    u = apx * F.col("__abx") + apy * F.col("__aby")
-    w = apx * apx + apy * apy
-    d2 = (
-        F.when(u <= 0, w)
-        .when(u >= F.col("__v"), w - 2 * u + F.col("__v"))
-        .otherwise(w - (u * u) / F.col("__v"))
-    )
-    d = F.sqrt(F.greatest(d2, F.lit(0.0)))
-    build_side = _maybe_broadcast(build, broadcast_build)
-    cand = (
-        probe.join(build_side, "cell")
-        .withColumn("__d", d)
-        .filter(F.col("__d") <= F.lit(float(radius_m)))
-    )
-    carry_out = [c for c in carry if c != point_id]
-    best = cand.groupBy(point_id).agg(
-        F.min(
-            F.struct(
-                F.col("__d").alias("d"),
-                F.col("__e").alias("be"),
-                # carry columns are functions of the point -- identical on
-                # every candidate row, so they ride the fold for free and
-                # the caller skips a full re-join on point_id downstream
-                *[F.col(c).alias(f"c_{c}") for c in carry_out],
-            )
-        ).alias("__best")
-    )
-    return best.select(
-        F.col(point_id),
-        F.col("__best.be").alias(seg_id),
-        F.col("__best.d").alias("dist_m"),
-        F.lit(1).alias("knn_rank"),
-        *[F.col(f"__best.c_{c}").alias(c) for c in carry_out],
     )
 
 
@@ -279,8 +194,7 @@ def radius_join_segments(
     (``p2_enrichData.py:536-552`` -- every edge within 200 m gets
     ``amenity_nearby``). There is no per-point ranking: every in-radius
     entity is kept. Callers that also need a nearest-entity flag take it
-    from :func:`knn_join_segments` and join the two aggregates (both
-    shuffles are on the same keys and combiner-friendly).
+    from :func:`knn_join_segments`.
     """
     res = h3idx.pick_res(radius_m)
     build = segments.withColumn("cell", F.explode(_ring1_cover(res)))
@@ -307,21 +221,24 @@ def radius_join_segments(
 PAIR_CHUNK = 1 << 20
 
 
-def _segment_index(segments: DataFrame, radii: tuple[float, ...], seg_id: str) -> dict:
+def _segment_index(
+    segments: DataFrame, radii: tuple[float, ...], seg_id: str, flat_kx: float | None
+) -> dict:
     """Driver-side cell index of ``segments`` for the snap kernel, in ONE
     Spark job (``toArrow``).
 
     Segments are sorted by ``seg_id``, so a segment's row number orders
     ties exactly as the ``(dist_m, seg_id)`` rule does. Per segment it keeps
-    ``ax, ay`` and the :func:`_segment_terms`; per rung, the ring-1 cover
-    cells of every segment as sorted ``cells`` with their segment ``rows``.
-    Both come from the column expressions :func:`knn_join_segments` uses,
-    so the kernel's ``dist_m`` is bit-identical to it. Raises
-    ``ValueError`` when the index exceeds :data:`BROADCAST_GUARD_BYTES`.
+    ``ax, ay`` and the :func:`_segment_terms` (``flat_kx`` as there); per
+    rung, the ring-1 cover cells of every segment as sorted ``cells`` with
+    their segment ``rows``. Raises ``ValueError`` when the index exceeds
+    :data:`BROADCAST_GUARD_BYTES`.
     """
     res = [h3idx.pick_res(r) for r in radii]
     tbl = (
-        _segment_terms(segments.select(F.col(seg_id).alias("__e"), "ax", "ay", "bx", "by"))
+        _segment_terms(
+            segments.select(F.col(seg_id).alias("__e"), "ax", "ay", "bx", "by"), flat_kx
+        )
         .select(
             "__e", "ax", "ay", "__kx", "__abx", "__aby", "__v",
             *[_ring1_cover(rs).alias(f"__c{i}") for i, rs in enumerate(res)],
@@ -353,8 +270,8 @@ def _segment_index(segments: DataFrame, radii: tuple[float, ...], seg_id: str) -
 
 def _segment_dist_np(plat: np.ndarray, plon: np.ndarray, ix: dict, sg: np.ndarray) -> np.ndarray:
     """Point-to-segment distance (m) of each ``(plat, plon)`` to index row
-    ``sg``: the same IEEE operations, in the same order, as
-    :func:`knn_join_segments`' column expression."""
+    ``sg``: the same IEEE operations, in the same order, as the column
+    expression of :func:`..functions.geo.point_segment_dist_m`."""
     kx = ix["kx"][sg]
     v = ix["v"][sg]
     apx = (plon - ix["ax"][sg]) * kx
@@ -411,25 +328,33 @@ def _snap_points(
     return rows[o], sg[o], d[o]
 
 
-def knn_join_segments_adaptive(
+def knn_join_segments(
     points: DataFrame,
     segments: DataFrame,
-    radii: tuple[float, ...] = (25.0, 200.0),
+    radii: tuple[float, ...],
     point_id: str = "point_id",
     seg_id: str = "edge_id",
     lat: str = "lat",
     lon: str = "lon",
     carry: tuple[str, ...] = (),
+    flat_kx: float | None = None,
 ) -> DataFrame:
-    """Escalating-radius kNN(1) snap of points to polyline segments, as
-    one ``mapInArrow`` kernel over a broadcast cell index.
+    """kNN(1) snap of points to polyline *segments* within ``radii[-1]``
+    metres, as one ``mapInArrow`` kernel over a broadcast cell index.
 
-    Same output as :func:`knn_join_segments` at ``radii[-1]``:
-    ``(point_id, seg_id, dist_m, knn_rank, *carry)``, one row per point
-    with a segment within the last radius, ties broken on
-    ``(dist_m, seg_id)``, ``dist_m`` bit-identical. Each input row is
-    snapped on its own, so ``point_id`` should be unique (pages are, after
-    ``dedupe_latest``).
+    Replaces the reference's ``sjoin_nearest(max_distance=...)`` snaps
+    onto edges (amenities 200 m ``p2_enrichData.py:541``, PT stops 30 m
+    ``:590``) and the graft's pages->edges snap. A single radius is
+    ``radii=(r,)``; more rungs only change the speed, never the result.
+
+    ``segments`` must carry ``ax, ay, bx, by`` (from
+    :func:`explode_segments`). Returns ``(point_id, seg_id, dist_m,
+    knn_rank, *carry)``: one row per input row with finite coordinates
+    and a segment within the last radius, ``knn_rank`` always 1, ties
+    broken on ``(dist_m, seg_id)``. Each input row is snapped on its own,
+    whatever its ``point_id`` (NULL and repeated ids included).
+    ``flat_kx`` fixes the metres-per-degree of longitude, as in
+    :func:`..functions.geo.point_segment_dist_m`.
 
     - :func:`_segment_index` builds the per-rung index in one Spark job
       and ships it with ``sparkContext.broadcast``. A ``ValueError`` names
@@ -443,10 +368,13 @@ def knn_join_segments_adaptive(
 
     The plan has no shuffle, aggregate, anti-join or checkpoint, so a lazy
     ``points`` input is evaluated once per consumption of the result.
-    Reference twin (the per-rung SQL cascade): ``tests/_twins.py::knn_cascade_sql``.
+    Reference twins: ``tests/_twins.py::knn_struct_min_sql`` (one radius)
+    and ``knn_cascade_sql`` (the per-rung SQL cascade).
     """
     radii = tuple(float(r) for r in radii)
-    bc = points.sparkSession.sparkContext.broadcast(_segment_index(segments, radii, seg_id))
+    bc = points.sparkSession.sparkContext.broadcast(
+        _segment_index(segments, radii, seg_id, flat_kx)
+    )
     chunk = PAIR_CHUNK  # bound into the closure: workers do not see driver globals
     carry_out = [c for c in carry if c != point_id]
     schema = T.StructType([

@@ -427,48 +427,35 @@ def add_bicycle_parking(edges: DataFrame, amenities: DataFrame) -> DataFrame:
         "edge_id", "seg_idx", "ax", "ay", "bx", "by"
     )
     pts = amenities.select("amenity_id", "lat", "lon")
-    names = amenities.select("amenity_id", "amenity")
     # dedicated radius membership (no per-amenity ranking window over every
     # in-radius candidate -- dense cells would pay it for nothing) + the
-    # nearest flag from the shuffle-light kNN(1) struct-min
+    # nearest flag from the broadcast-index kNN(1) kernel, which carries
+    # the amenity name itself
     near = spatial.radius_join_segments(
         pts, segs, radius_m=200.0,
         point_id="amenity_id", seg_id="edge_id", broadcast_build=False,
-    ).join(names, "amenity_id")
+    ).join(amenities.select("amenity_id", "amenity"), "amenity_id")
     nearest = spatial.knn_join_segments(
-        pts, segs, radius_m=200.0,
-        point_id="amenity_id", seg_id="edge_id", broadcast_build=False,
-    ).join(names, "amenity_id")
+        amenities, segs, radii=(200.0,),
+        point_id="amenity_id", seg_id="edge_id", carry=("amenity",),
+    )
 
-    nearby = near.groupBy("edge_id").agg(
-        F.concat_ws(
+    def names(alias: str) -> Column:
+        return F.concat_ws(
             ", ",
             F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("amenity_id"), F.col("amenity")))
-                ),
+                F.array_sort(F.collect_list(F.struct(F.col("amenity_id"), F.col("amenity")))),
                 lambda s: s["amenity"],
             ),
-        ).alias("amenity_nearby")
-    )
-    on = (
-        nearest
-        .groupBy("edge_id")
-        .agg(
-            F.concat_ws(
-                ", ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("amenity_id"), F.col("amenity")))
-                    ),
-                    lambda s: s["amenity"],
-                ),
-            ).alias("amenity_on")
-        )
+        ).alias(alias)
+
+    # both per-edge lists are hash-partitioned on edge_id, so they meet
+    # without another exchange and reach the edges in one join
+    per_edge = near.groupBy("edge_id").agg(names("amenity_nearby")).join(
+        nearest.groupBy("edge_id").agg(names("amenity_on")), "edge_id", "full"
     )
     return (
-        edges.join(nearby, "edge_id", "left")
-        .join(on, "edge_id", "left")
+        edges.join(per_edge, "edge_id", "left")
         .withColumn("amenity_nearby", F.coalesce("amenity_nearby", F.lit("")))
         .withColumn("amenity_on", F.coalesce("amenity_on", F.lit("")))
     )
@@ -490,9 +477,8 @@ def add_pt_stops(edges: DataFrame, stops: DataFrame) -> DataFrame:
         F.concat_ws("/", "member_ref", "name").alias("stop_id"), "member_ref", "name", "lat", "lon"
     ).dropDuplicates(["stop_id"])
     snapped = spatial.knn_join_segments(
-        stops_k, segs, radius_m=30.0, point_id="stop_id", seg_id="edge_id",
-        broadcast_build=False,
-    ).join(stops_k.select("stop_id", "name"), "stop_id")
+        stops_k, segs, radii=(30.0,), point_id="stop_id", seg_id="edge_id", carry=("name",),
+    )
     per_edge = snapped.groupBy("edge_id").agg(
         F.lit(1).alias("pt_stop_on"),
         F.count(F.lit(1)).alias("pt_stop_count"),

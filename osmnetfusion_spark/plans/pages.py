@@ -170,17 +170,18 @@ def snap_pages_to_edges(
     ``(dist_m, edge_id)``. The page coordinates ride along, so downstream
     tiling never re-joins the page corpus on url.
 
-    Runs :func:`..operators.spatial.knn_join_segments_adaptive` over the
-    25 m / 60 m / ``radius_m`` rungs: one Spark job collects the segment
-    cell index and broadcasts it, then one ``mapInArrow`` pass snaps each
-    Arrow batch of pages in numpy, escalating only the pages a finer rung
-    left unmatched. No shuffle and no checkpoint, so a lazy ``pages``
-    input (dedupe -> as-of -> extract) runs once per consumption. ``url``
-    is expected unique, as :func:`dedupe_latest` leaves it.
+    Runs :func:`..operators.spatial.knn_join_segments`, the one kNN(1)
+    segment snap, over the 25 m / 60 m / ``radius_m`` rungs: one Spark job
+    collects the segment cell index and broadcasts it, then one
+    ``mapInArrow`` pass snaps each Arrow batch of pages in numpy,
+    escalating only the pages a finer rung left unmatched. No shuffle and
+    no checkpoint, so a lazy ``pages`` input (dedupe -> as-of -> extract)
+    runs once per consumption. Every page row is snapped on its own;
+    ``url`` is unique after :func:`dedupe_latest`.
     """
     ladder = [25.0, 60.0, radius_m]
     radii = tuple(r for r in ladder if r < radius_m) + (radius_m,)
-    return spatial.knn_join_segments_adaptive(
+    return spatial.knn_join_segments(
         pages, edge_segments, radii=radii,
         point_id="url", seg_id="edge_id", carry=("lat", "lon"),
     ).select("url", "edge_id", "dist_m", "lat", "lon")

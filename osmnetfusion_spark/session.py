@@ -105,13 +105,8 @@ def get_session(
         # keep broadcast threshold generous: dim tables (ranks, clusters,
         # tile metadata) are tiny relative to the pages fact table
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # prefer shuffled-hash over sort-merge when the per-partition build
-        # side fits (guide §3.1/§9): the dedup/text equi-joins shuffle a few
-        # MB per partition and the SMJ sort dominated their runtime
-        # (measured: jaccard candidate join 7.5 s -> 2.5-3.4 s at 50k docs).
-        # The AQE threshold bounds the runtime rewrite, so an oversized
-        # build side still falls back to sort-merge instead of OOMing.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
+        # AQE rewrites a sort-merge join to shuffled-hash at runtime only
+        # when every partition's build side is under this threshold
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m"
         )

@@ -217,6 +217,8 @@ def synthetic_city(scale: int = 1) -> dict[str, pd.DataFrame]:
         }
     )
     nodes = pd.concat([nodes, dense], ignore_index=True)
+    # osmid -> (x, y): an edge looks up its end nodes in O(1)
+    xy = dict(zip(nodes.osmid.tolist(), zip(nodes.x.tolist(), nodes.y.tolist())))
 
     # ---- edges
     rows: list[dict] = []
@@ -229,10 +231,9 @@ def synthetic_city(scale: int = 1) -> dict[str, pd.DataFrame]:
         return "residential"
 
     def add_edge(u, v, hwy, *, oneway=False, key=0, coords=None, **tags):
-        un = nodes.loc[nodes.osmid == u].iloc[0]
-        vn = nodes.loc[nodes.osmid == v].iloc[0]
+        a, b = xy[u], xy[v]  # both ends must be nodes
         if coords is None:
-            coords = [[un.x, un.y], [vn.x, vn.y]]
+            coords = [a, b]
         row = {
             "u": int(u), "v": int(v), "key": int(key),
             "osmid": int(100_000 + len(rows)),
@@ -303,6 +304,7 @@ def synthetic_city(scale: int = 1) -> dict[str, pd.DataFrame]:
                               "y": [curve[-1][1]], "highway": [""]})],
         ignore_index=True,
     )
+    xy[curve_end] = tuple(curve[-1])
     add_edge(nid(g - 1, g - 1), curve_end, "residential", coords=curve)
 
     # motif: long chord passing through the buffer of big crossing (4,4)

@@ -23,9 +23,9 @@ output between the two.
   reference-parity tally (tests/test_reference_parity.py);
 - :func:`strip_html_loop`: the per-row ``re`` twin of
   ``pages._strip_html`` (tests/test_pages.py);
-- :func:`knn_cascade_sql`: the per-rung SQL cascade, twin of the
-  ``spatial.knn_join_segments_adaptive`` kernel
-  (tests/test_snap_kernel.py).
+- :func:`knn_struct_min_sql`: the SQL struct-min kNN(1) plan, and
+  :func:`knn_cascade_sql`, the per-rung cascade of it: twins of the
+  ``spatial.knn_join_segments`` kernel (tests/test_snap_kernel.py).
 """
 
 from __future__ import annotations
@@ -36,7 +36,9 @@ from functools import reduce
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from osmnetfusion_spark import h3idx
 from osmnetfusion_spark.functions import folds, geo
 from osmnetfusion_spark.functions.folds import (
     BIKE_HW_ALL,
@@ -49,6 +51,7 @@ from osmnetfusion_spark.functions.folds import (
     _uniq,
 )
 from osmnetfusion_spark.operators import spatial
+from osmnetfusion_spark.operators.partitioning import fan_out
 from osmnetfusion_spark.plans.merge import EDGE_OUT_SCHEMA, py_list_str
 from osmnetfusion_spark.plans.simplify import _kmeans_det
 
@@ -66,6 +69,69 @@ def strip_html_loop(html: bytes | None) -> str | None:
     return text.decode("utf-8", errors="replace")
 
 
+def knn_struct_min_sql(
+    points: DataFrame,
+    segments: DataFrame,
+    radius_m: float,
+    point_id: str = "point_id",
+    seg_id: str = "edge_id",
+    lat: str = "lat",
+    lon: str = "lon",
+    carry: tuple[str, ...] = (),
+    flat_kx: float | None = None,
+) -> DataFrame:
+    """SQL twin of ``spatial.knn_join_segments`` at one radius: the
+    original struct-min plan.
+
+    The segments, exploded to their ring-1-dilated cover cells, are
+    equi-joined with each point's own cell; the distance is the same
+    column expression over the ``spatial._segment_terms``, and ONE
+    ``groupBy(point).agg(min(struct(dist, seg_id)))`` keeps the nearest,
+    the lexicographic struct-min being the kNN(1) rule. Unlike the kernel,
+    rows sharing a ``point_id`` (NULL included) collapse to one.
+    """
+    res = h3idx.pick_res(radius_m)
+    m = F.lit(geo.M_PER_DEG)
+    build = spatial._segment_terms(
+        segments.select(F.col(seg_id).alias("__e"), "ax", "ay", "bx", "by"), flat_kx
+    ).withColumn("cell", F.explode(spatial._ring1_cover(res)))
+    probe = fan_out(
+        points.select(point_id, lat, lon, *[c for c in carry if c not in (point_id, lat, lon)]),
+        point_id,
+    ).withColumn("cell", h3idx.cell_col(F.col(lat), F.col(lon), res))
+    apx = (F.col(lon) - F.col("ax")) * F.col("__kx")
+    apy = (F.col(lat) - F.col("ay")) * m
+    u = apx * F.col("__abx") + apy * F.col("__aby")
+    w = apx * apx + apy * apy
+    d2 = (
+        F.when(u <= 0, w)
+        .when(u >= F.col("__v"), w - 2 * u + F.col("__v"))
+        .otherwise(w - (u * u) / F.col("__v"))
+    )
+    cand = (
+        probe.join(build, "cell")
+        .withColumn("__d", F.sqrt(F.greatest(d2, F.lit(0.0))))
+        .filter(F.col("__d") <= F.lit(float(radius_m)))
+    )
+    carry_out = [c for c in carry if c != point_id]
+    best = cand.groupBy(point_id).agg(
+        F.min(
+            F.struct(
+                F.col("__d").alias("d"),
+                F.col("__e").alias("be"),
+                *[F.col(c).alias(f"c_{c}") for c in carry_out],
+            )
+        ).alias("__best")
+    )
+    return best.select(
+        F.col(point_id),
+        F.col("__best.be").alias(seg_id),
+        F.col("__best.d").alias("dist_m"),
+        F.lit(1).alias("knn_rank"),
+        *[F.col(f"__best.c_{c}").alias(c) for c in carry_out],
+    )
+
+
 def knn_cascade_sql(
     points: DataFrame,
     segments: DataFrame,
@@ -74,14 +140,14 @@ def knn_cascade_sql(
     seg_id: str = "edge_id",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """SQL twin of ``spatial.knn_join_segments_adaptive``: the original
-    cascade. Each rung is a ``knn_join_segments`` struct-min, materialized
-    with ``localCheckpoint``; the points it matched are anti-joined away
-    before the next radius, and the rungs are unioned."""
+    """SQL twin of ``spatial.knn_join_segments`` over several rungs: the
+    original cascade. Each rung is a :func:`knn_struct_min_sql`,
+    materialized with ``localCheckpoint``; the points it matched are
+    anti-joined away before the next radius, and the rungs are unioned."""
     remaining, outs = points, []
     for r in radii:
-        matched = spatial.knn_join_segments(
-            remaining, segments, radius_m=r, point_id=point_id, seg_id=seg_id, carry=carry
+        matched = knn_struct_min_sql(
+            remaining, segments, r, point_id=point_id, seg_id=seg_id, carry=carry
         ).localCheckpoint()
         outs.append(matched)
         remaining = remaining.join(matched.select(point_id), point_id, "left_anti")

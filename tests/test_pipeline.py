@@ -150,10 +150,24 @@ def test_cc_distributed_fallback_matches_driver_path(spark, monkeypatch):
 def test_durable_fold_runs_once_per_stage(spark, tmp_path, monkeypatch):
     """A durable run emits each step-11 link once: the g_id dense index
     pins the fold output before its range shuffle, so neither the
-    sampling job nor the shuffle re-runs the fold."""
+    sampling job nor the shuffle re-runs the fold. The same pass pins the
+    Spark jobs of the two enrich snap stages, counted per stage with a
+    job group."""
     from _udfcount import udf_counts
     from osmnetfusion_spark.checkpoint import Snapshotter
 
+    sc = spark.sparkContext
+    stage = Snapshotter.stage
+
+    def grouped_stage(self, name, df_fn, lineage_key=None):
+        sc.setJobGroup(f"fold-once:{name}", name)
+        try:
+            return stage(self, name, df_fn, lineage_key)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(Snapshotter, "stage", grouped_stage)
     tables = synth.city_to_spark(spark, synth.synthetic_city(1))
     snap = Snapshotter(spark, str(tmp_path / "wh"))
     counts = udf_counts(spark, monkeypatch)
@@ -161,3 +175,11 @@ def test_durable_fold_runs_once_per_stage(spark, tmp_path, monkeypatch):
     rows = snap.manifest["stages"]["p3_final_edges"]["rows"]
     assert rows > 0
     assert counts("_fold_group_arrays")[1] == rows
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = {
+        s: len(sc.statusTracker().getJobIdsForGroup(f"fold-once:{s}"))
+        for s in ("enrich_amenity_edges", "enrich_pt_edges")
+    }
+    # with the SQL struct-min snap these stages ran 9 and 7 jobs
+    assert jobs == {"enrich_amenity_edges": 8, "enrich_pt_edges": 5}

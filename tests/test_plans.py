@@ -10,11 +10,15 @@ from osmnetfusion_spark import driver_contract as DC
 SF = "/root/testdata/sf0.001"
 
 
-def _plan(spark, name: str) -> str:
-    df = DC.QUERIES[name][0](spark, SF)
+def _explain(df) -> str:
+    spark = df.sparkSession
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def _plan(spark, name: str) -> str:
+    return _explain(DC.QUERIES[name][0](spark, SF))
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -22,17 +26,28 @@ def test_filter_pushdown_reaches_scan(spark):
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
 
 
-def test_column_pruning_on_knn_scan(spark):
-    plan = _plan(spark, "q_knn_snap")
+def test_column_pruning_on_knn_scan(spark, monkeypatch):
     # the kNN snap must read ONLY the key column from documents -- lat/lon
-    # are derived; reading text/html-sized columns at 10^12 rows would sink it
+    # are derived; reading text/html-sized columns at 10^12 rows would sink
+    # it. The segment side is read by the index collect, not by the plan.
+    frame = type(spark.range(1))
+    collected = []
+    to_arrow = frame.toArrow
+    monkeypatch.setattr(
+        frame, "toArrow", lambda df: collected.append(_explain(df)) or to_arrow(df)
+    )
+    plan = _plan(spark, "q_knn_snap")
     assert "ReadSchema: struct<doc_id:bigint>" in plan
-    assert "ReadSchema: struct<s_suppkey:bigint>" in plan
+    assert len(collected) == 1
+    assert "ReadSchema: struct<s_suppkey:bigint>" in collected[0]
 
 
 def test_knn_build_side_broadcast(spark):
+    # the segment index ships as a broadcast variable: the snap is one
+    # Arrow kernel over the points, with no join, aggregate or cartesian
     plan = _plan(spark, "q_knn_snap")
-    assert "BroadcastHashJoin" in plan
+    assert "MapInArrow" in plan
+    assert "Join" not in plan and "Aggregate" not in plan
     assert "CartesianProduct" not in plan
 
 
@@ -118,8 +133,8 @@ def test_registry_integrity():
 
 
 def test_broadcast_guard_blocks_large_build(spark, tmp_path, monkeypatch):
-    # a caller claiming broadcast_build=True must NOT get a broadcast when
-    # the build side's source files exceed the guard threshold -- an
+    # a radius join claiming broadcast_build=True must NOT get a broadcast
+    # when the build side's source files exceed the guard threshold -- an
     # accidental planet-scale broadcast would OOM every executor
     from osmnetfusion_spark.operators import spatial as SP
 
@@ -135,13 +150,13 @@ def test_broadcast_guard_blocks_large_build(spark, tmp_path, monkeypatch):
 
     pts = DC.doc_points(spark, SF).select("doc_id", "lat", "lon")
     # small file, default guard: hint honored
-    df = SP.knn_join_segments(
+    df = SP.radius_join_segments(
         pts, file_segs, radius_m=100.0, point_id="doc_id", seg_id="edge_id"
     )
     assert "BroadcastHashJoin" in plan_of(df)
     # same file "too large": hint dropped, no explicit broadcast of the build
     monkeypatch.setattr(SP, "BROADCAST_GUARD_BYTES", 1)
-    df2 = SP.knn_join_segments(
+    df2 = SP.radius_join_segments(
         pts, file_segs, radius_m=100.0, point_id="doc_id", seg_id="edge_id"
     )
     assert "ResolvedHint" not in df2._jdf.queryExecution().analyzed().toString()

@@ -42,6 +42,16 @@ def test_default_master_uses_usable_cores(monkeypatch):
     assert session.get_session().conf["master"] == "local[3]"
 
 
+def test_join_strategy_is_left_to_the_planner(monkeypatch):
+    """No global shuffled-hash preference: a static shuffled-hash join
+    is picked from size estimates and its build map does not spill, so
+    only AQE's bounded runtime rewrite may choose one."""
+    monkeypatch.setattr(SparkSession, "builder", _RecordingBuilder())
+    conf = session.get_session().conf
+    assert "spark.sql.join.preferSortMergeJoin" not in conf
+    assert conf["spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"] == "256m"
+
+
 def _gib(size: str) -> float:
     return float(size[:-1]) / {"m": 1024, "g": 1}[size[-1]]
 

@@ -1,5 +1,6 @@
-"""The broadcast-index snap kernel (``spatial.knn_join_segments_adaptive``)
-against its SQL twin, the per-rung cascade in ``tests/_twins.py``.
+"""The broadcast-index snap kernel (``spatial.knn_join_segments``)
+against its SQL twins in ``tests/_twins.py``: the struct-min plan and its
+per-rung cascade.
 
 Every comparison is on ``(point_id, edge_id, dist_m bits, knn_rank, lat,
 lon)``: the kernel must pick the same edge at the same distance, to the
@@ -9,7 +10,8 @@ bit, as the struct-min plan it replaced.
 import numpy as np
 import pytest
 
-from _twins import knn_cascade_sql
+from _twins import knn_cascade_sql, knn_struct_min_sql
+from osmnetfusion_spark.driver_contract import FLAT_KX
 from osmnetfusion_spark.functions import geo
 from osmnetfusion_spark.operators import spatial as SP
 
@@ -54,11 +56,16 @@ def _rows(df):
     )
 
 
-def _both(spark, pts, segs, radii=RADII):
+def _both(spark, pts, segs, radii=RADII, flat_kx=None):
+    """Kernel rows and SQL twin rows: the cascade, or with ``flat_kx`` the
+    struct-min plan at the last radius."""
     p = spark.createDataFrame(pts, PTS)
     s = spark.createDataFrame(segs, SEGS)
-    got = SP.knn_join_segments_adaptive(p, s, radii=radii, carry=("lat", "lon"))
-    want = knn_cascade_sql(p, s, radii, carry=("lat", "lon"))
+    got = SP.knn_join_segments(p, s, radii=radii, carry=("lat", "lon"), flat_kx=flat_kx)
+    if flat_kx is None:
+        want = knn_cascade_sql(p, s, radii, carry=("lat", "lon"))
+    else:
+        want = knn_struct_min_sql(p, s, radii[-1], carry=("lat", "lon"), flat_kx=flat_kx)
     return _rows(got), _rows(want)
 
 
@@ -71,6 +78,43 @@ def test_kernel_matches_sql_cascade_on_random_layouts(spark, seed):
     # the layout exercises the first rung and the escalation past it
     assert min(dists) <= 25.0 < max(dists)
     assert len(got) < 1500  # and points beyond the last radius
+
+
+@pytest.mark.parametrize("radii", [(200.0,), RADII])
+def test_flat_kx_reaches_the_kernel(spark, radii):
+    # the contract's fixed projection constant: the kernel must match the
+    # struct-min plan under it, and differ from the default projection
+    rng = np.random.default_rng(8)
+    pts, segs = _random_points(rng, 600), _segments(_random_edges(rng, 30))
+    got, want = _both(spark, pts, segs, radii=radii, flat_kx=FLAT_KX)
+    assert got == want and got
+    default, _ = _both(spark, pts, segs, radii=radii)
+    assert {r[2] for r in got} != {r[2] for r in default}
+
+
+def test_repeated_and_null_point_ids_each_snap(spark):
+    # every row with finite coordinates is snapped on its own, whatever
+    # its point_id; the struct-min plan collapses rows that share one
+    rng = np.random.default_rng(9)
+    pts = _random_points(rng, 300)
+    s = spark.createDataFrame(_segments(_random_edges(rng, 20)), SEGS)
+    shared = [(None if i % 3 == 0 else i % 7, la, lo) for i, la, lo in pts]
+
+    def snap(rows):
+        out = SP.knn_join_segments(
+            spark.createDataFrame(rows, PTS), s, radii=RADII, carry=("lat", "lon")
+        )
+        # the random coordinates tell the rows apart
+        return sorted(
+            ((r.lat, r.lon), r.point_id, r.edge_id, r.dist_m.hex()) for r in out.collect()
+        )
+
+    own = snap(pts)
+    assert len(own) > 100
+    new_id = {(la, lo): i for i, la, lo in shared}
+    assert snap(shared) == [(xy, new_id[xy], e, d) for xy, _, e, d in own]
+    collapsed = knn_struct_min_sql(spark.createDataFrame(shared, PTS), s, RADII[-1])
+    assert collapsed.count() == 8  # ids 0..6 and NULL
 
 
 def test_ties_break_on_edge_id(spark):
@@ -135,7 +179,7 @@ def test_empty_input(spark):
     rng = np.random.default_rng(4)
     p = spark.createDataFrame([], PTS)
     s = spark.createDataFrame(_segments(_random_edges(rng, 5)), SEGS)
-    out = SP.knn_join_segments_adaptive(p, s, radii=RADII, carry=("lat", "lon"))
+    out = SP.knn_join_segments(p, s, radii=RADII, carry=("lat", "lon"))
     assert out.columns == ["point_id", "edge_id", "dist_m", "knn_rank", "lat", "lon"]
     assert out.collect() == []
     assert _rows(knn_cascade_sql(p, s, RADII, carry=("lat", "lon"))) == []
@@ -146,7 +190,7 @@ def test_batch_spanning_several_pair_chunks(spark, monkeypatch):
     pts = _random_points(rng, 1000)
     segs = _segments(_random_edges(rng, 40))
     s = spark.createDataFrame(segs, SEGS)
-    ix = SP._segment_index(s, RADII, "edge_id")
+    ix = SP._segment_index(s, RADII, "edge_id", None)
     lat = np.array([p[1] for p in pts])
     lon = np.array([p[2] for p in pts])
     one = SP._snap_points(lat, lon, ix, chunk=1 << 30)
@@ -170,4 +214,4 @@ def test_index_over_guard_raises(spark, monkeypatch):
     s = spark.createDataFrame(_segments(_random_edges(rng, 5)), SEGS)
     monkeypatch.setattr(SP, "BROADCAST_GUARD_BYTES", 1000)
     with pytest.raises(ValueError, match=r"segment index is \d+ bytes"):
-        SP.knn_join_segments_adaptive(p, s, radii=RADII)
+        SP.knn_join_segments(p, s, radii=RADII)

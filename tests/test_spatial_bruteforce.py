@@ -90,7 +90,7 @@ def test_knn1_matches_bruteforce(spark, seed):
     got = {
         r.point_id: (r.edge_id, r.dist_m)
         for r in spatial.knn_join_segments(
-            pdf, sdf, radius_m=radius, point_id="point_id", seg_id="edge_id"
+            pdf, sdf, radii=(radius,), point_id="point_id", seg_id="edge_id"
         ).collect()
     }
     want = {}

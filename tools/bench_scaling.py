@@ -73,7 +73,7 @@ def run_once(cpus: int, seg_path: str, n_pages: int, scale: int = 4) -> dict:
     pg = PG.extract_text(pg)
     pg = pg.filter(F.length("extracted_text") > 0)
     snap = spatial.knn_join_segments(
-        pg, segs, radius_m=60.0, point_id="url", seg_id="edge_id"
+        pg, segs, radii=(60.0,), point_id="url", seg_id="edge_id"
     )
     ted = tiles.tile_edge_density(snap, pg, segs)
     row = ted.agg(
